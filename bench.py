@@ -201,17 +201,6 @@ def run_crawl(
         # is CPU (scales with cores); cache traffic is memory bandwidth
         # (does not)
         cache_fat=os.environ.get("SPARK_GRAFT_BENCH_CACHE_FAT", "0") == "1",
-        # A/B hook for the data-proportional shuffle sizing (default on)
-        auto_shuffle_partitions=os.environ.get(
-            "SPARK_GRAFT_BENCH_AUTO_SHUFFLE", "1"
-        )
-        == "1",
-        # A/B hook for the per-partition byte target the auto-sizer
-        # aims at (sf1 sweep: 128 MiB may be too coarse when execution
-        # memory is shared across 8 concurrent tasks)
-        target_partition_bytes=int(
-            os.environ.get("SPARK_GRAFT_BENCH_TARGET_PB", str(128 << 20))
-        ),
     )
     eng = CrawlEngine(
         spark,

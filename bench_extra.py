@@ -173,7 +173,6 @@ def main() -> None:
             compact_seen_every=4,
             salt=0,
             cache_fat=False,
-            extra={"phase_timings": True},
         )
         eng = CrawlEngine(
             spark,

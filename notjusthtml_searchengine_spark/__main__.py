@@ -62,7 +62,7 @@ def main() -> None:
         "--face-detector", default="none",
         help="face detector plugin: none | fake | <model name>",
     )
-    ap.add_argument("--buckets", type=int, default=256)
+    ap.add_argument("--buckets", type=int, default=CrawlConfig.n_buckets)
     ap.add_argument("--master", default=None)
     # query mode (consumer catalog over an existing state dir):
     ap.add_argument("--search-keyword", default=None, metavar="TERM",

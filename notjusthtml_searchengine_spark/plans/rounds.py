@@ -21,8 +21,12 @@ still enter the seen set).
 
 from __future__ import annotations
 
+import functools
+import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
@@ -42,8 +46,50 @@ from ..functions.urlnorm import host_expr, path_expr, protocol_expr
 from ..media.udfs import exif_udf, phash_udf
 from ..operators import bloom as bloom_ops
 from ..operators import crawl_ops as ops
-from ..session import MAX_FILESIZE
-from .state import CrawlState
+from ..session import EST_PAGE_BYTES
+from .state import DRAINED_DDL, FRONTIER_DDL, SEEN_DDL, SITES_KEYS_DDL, CrawlState
+
+# J6 fetch / blob-winner joins: broadcast the skinny side only below
+# this ESTIMATED byte size (measured url+host chars + fixed per-row
+# overhead in the same job as the batch count), else shuffle-hash
+# (pages bucketed by url hash at that scale). Row-count thresholds
+# mis-measure wide rows and a 4M-row url batch is hundreds of MB on
+# every executor heap — bytes are what the broadcast actually costs.
+BROADCAST_MAX_BYTES = 64 << 20
+# estimated per-row overhead beyond measured string chars (hash, ints,
+# arrow/unsafe-row framing)
+BROADCAST_ROW_OVERHEAD = 48
+# Data-proportional shuffle sizing (measured at sf1: 8 shuffle
+# partitions over a 494k-page round = ~1.5 GB partitions; since
+# execution memory is shared across CONCURRENT tasks the high-thread
+# run spills first and N→4N efficiency collapsed to 0.685 — resizing
+# to volume restored 0.962, see BENCH/bench_sf1_rehearsal.json). Each
+# round predicts its volume (expected batch × measured avg page bytes ×
+# a row-expansion factor for the flat link/keyword explosion) and sets
+# spark.sql.shuffle.partitions to keep partitions near
+# TARGET_PARTITION_BYTES. AQE coalescing makes over-partitioning cheap
+# on clusters; this keeps AQE-off deployments safe too.
+TARGET_PARTITION_BYTES = 128 << 20
+SHUFFLE_ROW_EXPANSION = 3
+MAX_SHUFFLE_PARTITIONS = 4096
+# Two-sided refinement of the volume sizing (sf1 sweep,
+# BENCH/sf1_ab_r4.jsonl): once partitions are spill-safe, ADDING tasks
+# costs more than it saves — every extra task through the Python
+# extraction stage pays an Arrow round-trip, and 80 tasks measurably
+# lost ~9% sustained slope vs 64 on the same round. So the count is
+# capped at MAX_TASK_WAVES full waves of the scheduler, letting
+# partitions grow past TARGET_PARTITION_BYTES up to
+# SPILL_GUARD_PARTITION_BYTES (the r3 sf1 collapse was at ~1.5 GB
+# partitions; 512 MiB keeps 3x headroom under it at this heap). Beyond
+# the guard, volume wins again and the count rises — a 100 TB round
+# still fans out.
+MAX_TASK_WAVES = 8
+SPILL_GUARD_PARTITION_BYTES = 512 << 20
+# Concurrent sink writers: the dozen per-round sink jobs are
+# individually tiny, so at 6 threads the flush ran two serial waves
+# whose second wave was latency, not throughput (the scheduler
+# overlaps all jobs fine; measured r6).
+WRITE_THREADS = 12
 
 
 @dataclass
@@ -64,6 +110,10 @@ class CrawlConfig:
     # error rows.
     fetch_robots_txt: bool = False
     bloom_prefilter: bool = True
+    # state layout, fixed when the crawl bootstraps: the round-0
+    # manifest records both and every later round (a resume under other
+    # values included) reads, probes, merges and writes state with the
+    # manifest's values
     n_buckets: int = 32
     shard_bits: int = 1 << 20  # per-shard bloom bits (scale: size per bucket)
     salt: int = 8  # hot-host salting fan-out before extraction
@@ -72,49 +122,6 @@ class CrawlConfig:
     # reference run without model files (no Face rows); "fake" is the
     # deterministic stub; a real model slots in by name.
     face_detector: str = "none"
-    write_blobs: bool = True
-    dim_tables: bool = True  # sites/domains/content_types sinks
-    # J6 fetch / blob-winner joins: broadcast the skinny side only
-    # below this ESTIMATED byte size (measured url+host chars + fixed
-    # per-row overhead in the same job as the batch count), else
-    # shuffle-hash (pages bucketed by url hash at that scale).
-    # Row-count thresholds mis-measure wide rows and a 4M-row url
-    # batch is hundreds of MB on every executor heap — bytes are what
-    # the broadcast actually costs.
-    broadcast_max_bytes: int = 64 << 20
-    # estimated per-row overhead beyond measured string chars (hash,
-    # ints, arrow/unsafe-row framing)
-    broadcast_row_overhead: int = 48
-    # Data-proportional shuffle sizing (measured at sf1: 8 shuffle
-    # partitions over a 494k-page round = ~1.5 GB partitions; since
-    # execution memory is shared across CONCURRENT tasks the
-    # high-thread run spills first and N→4N efficiency collapsed to
-    # 0.685 — resizing to volume restored 0.962, see
-    # BENCH/bench_sf1_rehearsal.json). Each round predicts its volume
-    # (expected batch × measured avg page bytes × a row-expansion
-    # factor for the flat link/keyword explosion) and sets
-    # spark.sql.shuffle.partitions to keep partitions near
-    # target_partition_bytes. AQE coalescing makes over-partitioning
-    # cheap on clusters; this keeps AQE-off deployments safe too.
-    auto_shuffle_partitions: bool = True
-    target_partition_bytes: int = 128 << 20
-    shuffle_row_expansion: int = 3
-    max_shuffle_partitions: int = 4096
-    # Two-sided refinement of the volume sizing (sf1 sweep,
-    # BENCH/sf1_ab_r4.jsonl): once partitions are spill-safe, ADDING
-    # tasks costs more than it saves — every extra task through the
-    # Python extraction stage pays an Arrow round-trip, and 80 tasks
-    # measurably lost ~9% sustained slope vs 64 on the same round. So
-    # the count is capped at max_task_waves full waves of the
-    # scheduler, letting partitions grow past target_partition_bytes
-    # up to spill_guard_partition_bytes (the r3 sf1 collapse was at
-    # ~1.5 GB partitions; 512 MiB keeps 3x headroom under it at this
-    # heap). Beyond the guard, volume wins again and the count rises —
-    # a 100 TB round still fans out.
-    max_task_waves: int = 8
-    spill_guard_partition_bytes: int = 512 << 20
-    # round-1 fallback before any measured page sizes exist
-    est_page_bytes: int = 8192
     # Cache the fat (html) fetch result between branches. True trades
     # memory bandwidth (serialize once + deserialize per consumer) for
     # fewer scans; False re-derives each fat branch from the compressed
@@ -123,12 +130,95 @@ class CrawlConfig:
     # this class of corpus run ~equal wall at high core counts with
     # strictly better scaling efficiency when False.
     cache_fat: bool = True
-    compact_seen_every: int = 8
-    # expire superseded frontier/seen/bloom state after each seen
+    # seen/sites_keys compaction and frontier full-rewrite cadence;
+    # superseded frontier/seen/bloom state is expired after each
     # compaction (sinks untouched; see CrawlState.gc_state)
-    gc_state: bool = True
+    compact_seen_every: int = 8
     lineage_metrics: bool = True
     extra: dict = field(default_factory=dict)
+
+
+def _ms(since: float) -> int:
+    return int((time.monotonic() - since) * 1000)
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    """Left-fold ``unionByName`` over ``dfs``."""
+    return functools.reduce(DataFrame.unionByName, dfs)
+
+
+def _error_rows(df: DataFrame, r: int, code, text) -> DataFrame:
+    """Error-sink rows for the ``url_norm`` urls of ``df``; ``code`` and
+    ``text`` are each a literal or a column."""
+    return df.select(
+        F.lit(r).alias("round"),
+        F.col("url_norm").alias("url"),
+        F.lit(code).cast("int").alias("error_code"),
+        F.lit(text).alias("error_text"),
+    )
+
+
+def _robots_txt_urls(df: DataFrame) -> DataFrame:
+    """One ``<scheme>://<host>/robots.txt`` frontier row per host of
+    ``df`` (``url_norm``, ``host``, ``depth``), at PRIORITY_ROBOTS and
+    the host's least depth."""
+    return (
+        df.groupBy("host")
+        .agg(
+            F.max(protocol_expr("url_norm")).alias("_scheme"),
+            F.min("depth").alias("depth"),
+        )
+        .filter(F.length("_scheme") > 0)
+        .select(
+            F.concat(
+                F.col("_scheme"), F.lit("://"), F.col("host"), F.lit("/robots.txt")
+            ).alias("url_norm"),
+            F.lit(ops.PRIORITY_ROBOTS).alias("priority"),
+            "depth",
+            "host",
+        )
+        .withColumn("url_hash", F.xxhash64("url_norm"))
+    )
+
+
+@dataclass
+class _Round:
+    """What the phases of one round share: the state layout read from
+    the previous manifest, the manifest stats being built, the queued
+    sink writes, the frames to unpersist and the phase timings."""
+
+    spark: SparkSession
+    r: int
+    n_buckets: int
+    shard_bits: int
+    t0: float = field(default_factory=time.monotonic)
+    stats: dict = field(default_factory=dict)
+    sinks: list = field(default_factory=list)
+    cached: list = field(default_factory=list)
+    phase_ms: dict = field(default_factory=dict)
+    sink_ms: dict = field(default_factory=dict)
+
+    def sink(self, df: DataFrame, name: str, bucket_col: str | None = None) -> None:
+        """Queue the write of round table ``name``; with ``bucket_col``
+        it is a state table bucketed on that column."""
+        self.sinks.append((df, name, bucket_col))
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` for this round; it is unpersisted after commit."""
+        df = df.persist(_CACHE)
+        self.cached.append(df)
+        return df
+
+    @contextmanager
+    def _phase(self, label: str, timings: dict | None = None):
+        """Label the Spark jobs the block starts ``r{r:05d}:<label>`` and
+        record its wall ms in ``timings`` (default ``phase_ms``) under
+        the label's last ``:`` part. The job description is thread-local
+        and stays set after the block."""
+        self.spark.sparkContext.setJobDescription(f"r{self.r:05d}:{label}")
+        ts = time.monotonic()
+        yield
+        (self.phase_ms if timings is None else timings)[label.rsplit(":", 1)[-1]] = _ms(ts)
 
 
 class CrawlEngine:
@@ -143,39 +233,6 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg
-        # State-backend dispatch (cfg.extra["state_backend"]): the
-        # Iceberg backend fails LOUDLY at construction when the runtime
-        # jars are absent (IcebergUnavailable) instead of mid-crawl; it
-        # provisions the bucket-transform state tables up front and the
-        # parquet CrawlState keeps serving the manifest/sink surface
-        # (Iceberg replaces the bucketed-table trick + snapshot GC, not
-        # the sink layout — see iceberg_state module doc).
-        backend = cfg.extra.get("state_backend", "parquet")
-        if backend == "iceberg":
-            import warnings
-
-            from .iceberg_state import IcebergCrawlState
-
-            self.iceberg = IcebergCrawlState(spark, cfg.state_dir)
-            self.iceberg.create_state_tables(cfg.n_buckets)
-            # PROVISION-ONLY today (ADVICE r4): the tables, MERGE/expire
-            # SQL and round-tag surface are created and unit-pinned, but
-            # the round loop below still reads/writes frontier/seen/
-            # drained through the parquet CrawlState — the flag does NOT
-            # yet deliver atomic multi-table commits or snapshot GC.
-            # Warn loudly so a cluster operator doesn't assume otherwise.
-            warnings.warn(
-                "state_backend='iceberg' is provision-only: state tables "
-                "are created in the catalog but per-round state I/O still "
-                "uses the parquet CrawlState (see iceberg_state module "
-                "doc); atomic snapshot commits/GC are not yet routed",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        elif backend != "parquet":
-            raise ValueError(f"unknown state_backend {backend!r}")
-        else:
-            self.iceberg = None
         self.state = CrawlState(cfg.state_dir)
         self.pages = spark.read.schema(schemas.PAGES).parquet(pages_path)
         self.seeds_path = seeds_path
@@ -219,23 +276,9 @@ class CrawlEngine:
             # the robots alone; the seeds follow in round 2 under the
             # just-learned rules. Without this, seeds are the one url
             # class fetched rules-blind.
-            rob = (
-                frontier.groupBy("host")
-                .agg(F.max(protocol_expr("url_norm")).alias("_scheme"))
-                .filter(F.length("_scheme") > 0)
-                .select(
-                    F.concat(
-                        F.col("_scheme"), F.lit("://"), F.col("host"),
-                        F.lit("/robots.txt"),
-                    ).alias("url_norm"),
-                    "host",
-                    F.lit(ops.PRIORITY_ROBOTS).alias("priority"),
-                    F.lit(0).alias("depth"),
-                    F.lit(0).alias("round_added"),
-                )
-                .withColumn("url_hash", F.xxhash64("url_norm"))
+            frontier = frontier.unionByName(
+                _robots_txt_urls(frontier).withColumn("round_added", F.lit(0))
             )
-            frontier = frontier.unionByName(rob)
         self.state.write_bucketed(frontier, r, "frontier_full", self.cfg.n_buckets)
         seen0 = self.spark.createDataFrame([], schemas.SEEN)
         if self.cfg.fetch_robots_txt:
@@ -266,6 +309,7 @@ class CrawlEngine:
                 "bloom": f"r{r:05d}/bloom" if self.cfg.bloom_prefilter else None,
                 "pages_fetched": 0,
                 "n_buckets": self.cfg.n_buckets,
+                "shard_bits": self.cfg.shard_bits,
             },
         )
 
@@ -276,8 +320,6 @@ class CrawlEngine:
         return path
 
     def _seen_parts(self, parts: list[str], n_buckets: int) -> list[DataFrame]:
-        from .state import SEEN_DDL
-
         return [
             self.state.read_bucketed(self.spark, p, SEEN_DDL, n_buckets)
             for p in parts
@@ -285,22 +327,18 @@ class CrawlEngine:
 
     def _read_seen(self, parts: list[str], n_buckets: int | None = None) -> DataFrame:
         """Union view of all seen parts (membership queries/tests)."""
-        dfs = self._seen_parts(parts, n_buckets or self.cfg.n_buckets)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        return _union(self._seen_parts(parts, n_buckets or self.cfg.n_buckets))
 
     def _size_shuffle(self, pred_batch: int, avg_page_bytes: float) -> int | None:
         """Set spark.sql.shuffle.partitions for this round from the
         predicted data volume. Returns the setting (None = left as-is).
 
-        Three rules compose (each measured, see CrawlConfig fields):
-        1. volume / target_partition_bytes is the base count;
-        2. it is capped at max_task_waves full waves of the scheduler
+        Three rules compose (each measured, see the module constants):
+        1. volume / TARGET_PARTITION_BYTES is the base count;
+        2. it is capped at MAX_TASK_WAVES full waves of the scheduler
            (per-task Python-stage overhead beats partition-size relief
            once partitions are spill-safe), but never capped so hard
-           that partitions exceed spill_guard_partition_bytes — beyond
+           that partitions exceed SPILL_GUARD_PARTITION_BYTES — beyond
            the guard the count rises with volume again;
         3. the result is quantized UP to a multiple of the scheduler's
            parallelism: a count like 12 on an 8-thread scheduler runs
@@ -308,19 +346,16 @@ class CrawlEngine:
            2-thread scheduler is unaffected — exactly the asymmetry
            that collapsed N→4N scaling to 0.391 in BENCH_r03.
         Never shrinks below the parallelism; capped by
-        max_shuffle_partitions."""
-        cfg = self.cfg
-        if not cfg.auto_shuffle_partitions or pred_batch <= 0:
+        MAX_SHUFFLE_PARTITIONS."""
+        if pred_batch <= 0:
             return None
-        import math
-
-        est = pred_batch * max(avg_page_bytes, 1.0) * cfg.shuffle_row_expansion
+        est = pred_batch * max(avg_page_bytes, 1.0) * SHUFFLE_ROW_EXPANSION
         base = self.spark.sparkContext.defaultParallelism
-        by_target = max(1, math.ceil(est / cfg.target_partition_bytes))
-        by_guard = max(1, math.ceil(est / cfg.spill_guard_partition_bytes))
-        raw = max(min(by_target, cfg.max_task_waves * base), by_guard)
+        by_target = max(1, math.ceil(est / TARGET_PARTITION_BYTES))
+        by_guard = max(1, math.ceil(est / SPILL_GUARD_PARTITION_BYTES))
+        raw = max(min(by_target, MAX_TASK_WAVES * base), by_guard)
         parts = min(
-            cfg.max_shuffle_partitions,
+            MAX_SHUFFLE_PARTITIONS,
             math.ceil(raw / base) * base,
         )
         self.spark.conf.set("spark.sql.shuffle.partitions", str(parts))
@@ -385,7 +420,7 @@ class CrawlEngine:
             ).alias("chars"),
         ).first()
         n = int(row["n"])
-        est = int(row["chars"] or 0) + self.cfg.broadcast_row_overhead * n
+        est = int(row["chars"] or 0) + BROADCAST_ROW_OVERHEAD * n
         return n, est
 
     def _frontier_view(self, stats: dict, n_buckets: int) -> DataFrame:
@@ -403,8 +438,6 @@ class CrawlEngine:
         Per-round state WRITE volume is ∝ the round delta; the read
         side joins co-bucketed skinny tables.
         """
-        from .state import DRAINED_DDL, FRONTIER_DDL
-
         parts = [
             self.state.read_bucketed(self.spark, p, FRONTIER_DDL, n_buckets)
             for p in stats["frontier_parts"]
@@ -443,10 +476,7 @@ class CrawlEngine:
                     )
                 live.append(out)
             parts = live
-        frontier = parts[0]
-        for p in parts[1:]:
-            frontier = frontier.unionByName(p)
-        return frontier
+        return _union(parts)
 
     def _lineage(self, dfs: dict[str, tuple], r: int) -> DataFrame:
         """Per-partition lineage rows (north_rule) in one unioned job:
@@ -465,51 +495,91 @@ class CrawlEngine:
                 .withColumn("stage", F.lit(stage))
                 .select("round", "stage", "partition_id", "rows_out", "bytes")
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union(parts)
 
     # ------------------------------------------------------------------
     def run_round(self, r: int) -> dict:
-        t0 = time.monotonic()
-        cfg = self.cfg
         prev = self.state.manifest(r - 1)
         assert prev is not None, f"round {r - 1} not committed"
-        n_buckets = int(prev["stats"].get("n_buckets", cfg.n_buckets))
-        frontier = self._frontier_view(prev["stats"], n_buckets)
-        frontier_parts: list[str] = prev["stats"]["frontier_parts"]
-        drained_parts: list[str] = prev["stats"].get("drained_parts", [])
-        seen_parts: list[str] = prev["stats"]["seen_parts"]
-        seen_dfs = self._seen_parts(seen_parts, n_buckets)
+        prev = prev["stats"]
+        rd = _Round(
+            self.spark,
+            r,
+            n_buckets=int(prev.get("n_buckets", self.cfg.n_buckets)),
+            shard_bits=int(prev.get("shard_bits", self.cfg.shard_bits)),
+        )
+        frontier = self._frontier_view(prev, rd.n_buckets)
+        seen_dfs = self._seen_parts(prev["seen_parts"], rd.n_buckets)
+        drained = self._drain(rd, prev, frontier)
+        if drained is None:
+            return {"done": True, "round": r, "pages_fetched": 0}
+        batch, rules, broadcast_batch = drained
+        batch_use, batch_fetch, err_robots = self._hold_back(rd, batch, rules)
+        gated, combined, meta, errors = self._fetch_extract(
+            rd, batch_fetch, broadcast_batch
+        )
+        ok = meta.filter(F.col("gate") == "ok")
+        self._content_sinks(rd, prev, ok)
+        self._blob_sink(rd, ok, gated, broadcast_batch)
+        errors.append(self._media(rd, gated))
+        round_robots = self._robots_ingest(rd, gated)
+        rated = self._links(rd, combined)
+        cands = self._candidates(rated, rules, round_robots)
+        new = self._seen(rd, prev, cands, seen_dfs)
+        new_frontier = self._frontier(rd, prev, frontier, batch_use, new)
+        self._bloom(rd, prev, new)
+        errors.append(err_robots)
+        rd.sink(_union([e for e in errors if e is not None]), "errors")
+        if self.cfg.lineage_metrics:
+            lineage = self._lineage(
+                {
+                    "batch": (batch, F.length("url_norm")),
+                    "fetched_ok": (ok, F.col("size")),
+                    "links": (rated, F.length("dest_url")),
+                    "new_seen": (new, F.length("url_norm")),
+                },
+                r,
+            )
+            rd.sink(lineage, "metrics")
+        rd.phase_ms["pre_flush"] = _ms(rd.t0)
+        self._flush(rd)
+        stats = self._commit(rd, new_frontier)
+        # batch/combined are localCheckpoint'd (not persisted) — their
+        # blocks are released by the ContextCleaner when the round's
+        # references drop
+        for df in rd.cached:
+            df.unpersist()
+        return stats
 
+    def _drain(self, rd: _Round, prev: dict, frontier: DataFrame):
+        """W1/W2: drain this round's batch, counted and checkpointed.
+        Returns None for an empty batch, else (batch, the round-start
+        robots rules or None, whether the batch is broadcast)."""
+        cfg = self.cfg
         # data-proportional shuffle sizing: predict this round's batch
         # from the previous round's frontier additions (exact n_batch
         # refines it right after the drain; under-prediction here only
         # affects the drain's own window shuffle)
-        prev_avg_bytes = float(prev["stats"].get("avg_page_bytes", cfg.est_page_bytes))
-        pred_batch = int(prev["stats"].get("new_frontier", 0) or 0)
+        avg_bytes = float(prev.get("avg_page_bytes", EST_PAGE_BYTES))
+        pred_batch = int(prev.get("new_frontier", 0) or 0)
         if cfg.round_budget is not None:
             pred_batch = min(pred_batch, cfg.round_budget)
-        shuffle_parts = self._size_shuffle(pred_batch, prev_avg_bytes)
+        shuffle_parts = self._size_shuffle(pred_batch, avg_bytes)
 
-        # ---- W1/W2: drain --------------------------------------------
-        robots_rules_df = self._robots_view()
+        rules = self._robots_view()
         host_caps = None
-        if robots_rules_df is not None and cfg.round_seconds:
-            host_caps = ops.crawl_delay_caps(robots_rules_df, cfg.round_seconds)
+        if rules is not None and cfg.round_seconds:
+            host_caps = ops.crawl_delay_caps(rules, cfg.round_seconds)
         batch = ops.drain_frontier(
             frontier, cfg.round_budget, cfg.per_host_budget, host_caps=host_caps
         )
         # The drain-time robots backstop flag is folded in BEFORE the
-        # persist: every consumer (fetch, misses, error rows,
-        # tombstones) reads one cached frame, instead of re-evaluating
-        # a join-above-the-cache per consumer (measured ~15% round
-        # cost at local[8] when it sat above the cache).
-        if robots_rules_df is not None:
-            batch = ops.robots_mark(
-                batch, robots_rules_df, exempt_robots_txt=True
-            )
+        # checkpoint: every consumer (fetch, misses, error rows,
+        # tombstones) reads one materialized frame, instead of
+        # re-evaluating a join-above-the-cache per consumer (measured
+        # ~15% round cost at local[8] when it sat above the cache).
+        if rules is not None:
+            batch = ops.robots_mark(batch, rules, exempt_robots_txt=True)
         # localCheckpoint, not persist (r6): the batch is consumed by a
         # dozen downstream sink actions, and EVERY one of them was
         # re-analyzing the full drain lineage (frontier-view per-part
@@ -519,22 +589,24 @@ class CrawlEngine:
         # that collapsed the capped leg's core scaling (guide §7.3
         # "planning time itself can become the bottleneck", §3.3
         # "materialising an intermediate truncates the plan").
-        # Checkpointing materializes the same skinny frame the persist
-        # did, but downstream plans now start from a short scan. Fault
-        # tolerance of this intermediate is round-local (the round
-        # re-runs from the manifest on failure), so cutting lineage is
-        # safe — same trade as graph.py's iteration checkpoints.
-        self.spark.sparkContext.setJobDescription(f"r{r:05d}:drain+stats")
-        batch = batch.localCheckpoint(eager=True)
-        n_batch, batch_bytes = self._batch_stats(batch)
-        broadcast_batch = batch_bytes <= cfg.broadcast_max_bytes
-        resized = self._size_shuffle(n_batch, prev_avg_bytes)
-        if resized is not None:
-            shuffle_parts = resized
+        # Fault tolerance of this intermediate is round-local (the
+        # round re-runs from the manifest on failure), so cutting
+        # lineage is safe — same trade as graph.py's iteration
+        # checkpoints.
+        with rd._phase("drain+stats"):
+            batch = batch.localCheckpoint(eager=True)
+            n_batch, batch_bytes = self._batch_stats(batch)
+        resized = self._size_shuffle(n_batch, avg_bytes)
         if n_batch == 0:
-            return {"done": True, "round": r, "pages_fetched": 0}
+            return None
+        rd.stats["batch"] = n_batch
+        rd.stats["shuffle_partitions"] = shuffle_parts if resized is None else resized
+        return batch, rules, batch_bytes <= BROADCAST_MAX_BYTES
 
-        # ---- robots-first hold-back -----------------------------------
+    def _hold_back(self, rd: _Round, batch: DataFrame, rules: DataFrame | None):
+        """Robots-first hold-back and the drain-time robots backstop.
+        Returns (the urls this round drains, the ones it fetches, the
+        backstop's error rows or None)."""
         # A host's FIRST drain wave is its robots.txt alone: a url
         # whose host has its own /robots.txt row in this very batch
         # (rules still unknown — links and the robots prefetch join
@@ -547,7 +619,7 @@ class CrawlEngine:
         # round, so next round the host is no longer held whether its
         # robots fetch hit or missed).
         batch_use = batch
-        if cfg.fetch_robots_txt:
+        if self.cfg.fetch_robots_txt:
             is_rob = path_expr("url_norm") == "/robots.txt"
             held_hosts = batch.filter(is_rob).select("host").distinct()
             batch_use = batch.filter(is_rob).unionByName(
@@ -555,36 +627,34 @@ class CrawlEngine:
                     F.broadcast(held_hosts), "host", "left_anti"
                 )
             )
+        if rules is None:
+            return batch_use, batch_use, None
+        # The candidate-time robots_filter can only apply rules that
+        # existed when a url was DISCOVERED — rules that arrived later
+        # (or the hold-back's round-delayed first wave) must still be
+        # enforced. RFC practice is to check robots immediately before
+        # fetching: the ``robots_blocked`` flag was computed inside the
+        # checkpointed drain frame (one broadcast join over a
+        # budget-bounded frame — NOT the whole frontier, which would be
+        # O(frontier) per round); blocked rows divert to the error
+        # sink. They stay in ``batch_use`` so the drained tombstones
+        # still remove them from the frontier — each late-blocked url
+        # costs one drain slot, once, ever. /robots.txt itself is
+        # always fetchable.
+        err_robots = _error_rows(
+            batch_use.filter(F.col("robots_blocked")),
+            rd.r,
+            schemas.ERROR_CODES["ErrorRobotsBlocked"],
+            "robots",
+        )
+        batch_fetch = batch_use.filter(~F.col("robots_blocked")).drop("robots_blocked")
+        return batch_use, batch_fetch, err_robots
 
-        # ---- drain-time robots backstop -------------------------------
-        # The candidate-time robots_filter (below) can only apply rules
-        # that existed when a url was DISCOVERED — rules that arrived
-        # later (or the hold-back's round-delayed first wave) must
-        # still be enforced. RFC practice is to check robots
-        # immediately before fetching: the ``robots_blocked`` flag was
-        # computed inside the persisted drain frame above (one
-        # broadcast join over a budget-bounded frame — NOT the whole
-        # frontier, which would be O(frontier) per round); blocked
-        # rows divert to the error sink. They stay in ``batch_use`` so
-        # the drained tombstones still remove them from the frontier —
-        # each late-blocked url costs one drain slot, once, ever.
-        # /robots.txt itself is always fetchable.
-        err_robots = None
-        batch_fetch = batch_use
-        if robots_rules_df is not None:
-            err_robots = batch_use.filter(F.col("robots_blocked")).select(
-                F.lit(r).alias("round"),
-                F.col("url_norm").alias("url"),
-                F.lit(schemas.ERROR_CODES["ErrorRobotsBlocked"])
-                .cast("int")
-                .alias("error_code"),
-                F.lit("robots").alias("error_text"),
-            )
-            batch_fetch = batch_use.filter(~F.col("robots_blocked")).drop(
-                "robots_blocked"
-            )
-
-        # ---- J6: fetch + gates; salt hot hosts before the fat UDFs ----
+    def _fetch_extract(self, rd: _Round, batch_fetch: DataFrame, broadcast_batch: bool):
+        """J6 fetch + gates, then ONE fused extract+meta pass. Returns
+        (the gated fat rows, the extraction output, the per-page meta
+        cache, the gate and miss error rows)."""
+        cfg = self.cfg
         # column-prune before the join: text/lang are never used in
         # the round (text regeneration is a test-side invariant).
         # Inner-join + broadcast batch: the corpus is never shuffled;
@@ -613,7 +683,7 @@ class CrawlEngine:
         # re-derived per consumer from the compressed scan + broadcast
         # join, per cfg.cache_fat.
         if cfg.cache_fat:
-            gated = gated.persist(_CACHE)
+            gated = rd.cache(gated)
         # ONE fat pass for extraction AND the per-page meta columns
         # (r6): sniff/sha1/sha512/size ride the same scan that feeds
         # U1 instead of a second full corpus decode per round (the
@@ -635,45 +705,47 @@ class CrawlEngine:
         # Skinny meta cache: one row per fetched page; the dozen sink/
         # stat consumers below scan this cheap projection instead of
         # the 30x-larger combined frame.
-        meta = (
+        meta = rd.cache(
             combined.filter(F.col("kind") == 0)
             .select(
                 "url_norm", "host", "depth", "time_found", "gate",
                 "content_type", "sha1", "sha512", "size",
             )
             .withColumn("site_id", F.xxhash64("url_norm"))
-            .withColumn("content_id", F.xxhash64("url_norm", F.lit(r)))
-            .persist(_CACHE)
+            .withColumn("content_id", F.xxhash64("url_norm", F.lit(rd.r)))
         )
-        ok = meta.filter(F.col("gate") == "ok")
+        errors = [
+            _error_rows(
+                meta.filter(F.col("gate") != "ok"),
+                rd.r,
+                F.when(
+                    F.col("gate") == "too_big",
+                    schemas.ERROR_CODES["ErrorResponseToBig"],
+                ).otherwise(schemas.ERROR_CODES["ErrorBodyLenZero"]),
+                F.col("gate"),
+            ),
+            _error_rows(
+                ops.fetch_misses(batch_fetch, meta),
+                rd.r,
+                schemas.ERROR_CODES["ErrorFetchMissing"],
+                "miss",
+            ),
+        ]
+        return gated, combined, meta, errors
 
-        missed = ops.fetch_misses(batch_fetch, meta)
-        err_gate = meta.filter(F.col("gate") != "ok").select(
-            F.lit(r).alias("round"),
-            F.col("url_norm").alias("url"),
-            F.when(F.col("gate") == "too_big", schemas.ERROR_CODES["ErrorResponseToBig"])
-            .otherwise(schemas.ERROR_CODES["ErrorBodyLenZero"])
-            .cast("int")
-            .alias("error_code"),
-            F.col("gate").alias("error_text"),
-        ).unionByName(
-            missed.select(
-                F.lit(r).alias("round"),
-                F.col("url_norm").alias("url"),
-                F.lit(schemas.ERROR_CODES["ErrorFetchMissing"]).cast("int").alias("error_code"),
-                F.lit("miss").alias("error_text"),
-            )
-        )
+    def _content_sinks(self, rd: _Round, prev: dict, ok: DataFrame) -> None:
+        """S8 contents and the J1/J3/J4 dimension tables.
 
-        # Sink writes are deferred: persisted parents are materialized
-        # once (via the stats counts below), then all independent sink
-        # writes run concurrently from a thread pool — each write is a
-        # separate Spark job and the scheduler overlaps them, hiding
-        # per-job launch latency (a dozen sequential ~0.5s jobs/round
-        # would otherwise dominate small rounds).
-        pending: list[tuple] = []
-
-        # ---- S8 contents / S7 blobs (A4+J7) ---------------------------
+        Reference database.go:143-215 keeps sites / domains /
+        content_types as first-class queryable tables. Ids are
+        deterministic xxhash64 of the natural key, so the dim row is
+        derivable — but the reference exposes them as tables ("list
+        crawled domains" must not rescan contents), so each round
+        left-anti-inserts the new keys. The glob reads below resolve
+        their file list at plan-construction time (before this round's
+        dirs exist), so the concurrent sink writes cannot race them.
+        """
+        r = rd.r
         contents = ok.select(
             F.lit(r).alias("round"),
             F.col("url_norm").alias("url"),
@@ -684,196 +756,209 @@ class CrawlEngine:
             "sha1",
             "time_found",
         )
-        pending.append((contents, "contents"))
-
-        # ---- J1/J3/J4 dimension tables (reference database.go:143-215:
-        # sites / domains / content_types as first-class queryable
-        # tables). Ids are deterministic xxhash64 of the natural key, so
-        # the dim row is derivable — but the reference exposes them as
-        # tables ("list crawled domains" must not rescan contents), so
-        # each round left-anti-inserts the new keys. NOTE: the glob read
-        # below resolves its file list at plan-construction time (before
-        # this round's dirs exist), so the concurrent sink writes cannot
-        # race it.
-        new_sites_parts: list[str] = prev["stats"].get("sites_parts", [])
-        if cfg.dim_tables:
-            # sites grows with the crawl (≈ fetched pages), so its
-            # insert check gets the seen treatment: a bucketed
-            # site_id key-state table per round, co-partitioned
-            # anti-join (zero exchange on the state side), compacted
-            # on the seen cadence. The sink rows themselves stay
-            # per-round new-keys-only parquet (glob-queryable).
-            # domains/content_types are small dims — glob read is fine.
-            from .state import SITES_KEYS_DDL
-
-            sites_parts = list(new_sites_parts)
-            sites_new = ok.select(
-                "site_id", F.col("url_norm").alias("url")
-            ).dropDuplicates(["site_id"])
-            if sites_parts:
-                key_dfs = [
-                    self.state.read_bucketed(
-                        self.spark, p, SITES_KEYS_DDL, n_buckets,
-                        bucket_col="site_id",
-                    )
-                    for p in sites_parts
-                ]
-                sites_new = ops.anti_join_parts(sites_new, key_dfs, key="site_id")
-            else:
-                key_dfs = []
-            pending.append((sites_new, "sites"))
-            if r % cfg.compact_seen_every == 0:
-                merged_keys = sites_new.select("site_id")
-                for kd in key_dfs:
-                    merged_keys = merged_keys.unionByName(kd)
-                pending.append((merged_keys, "sites_keys"))
-                new_sites_parts = [f"r{r:05d}/sites_keys"]
-            else:
-                pending.append((sites_new.select("site_id"), "sites_keys"))
-                new_sites_parts = sites_parts + [f"r{r:05d}/sites_keys"]
-
-            dims = [
-                (
-                    "domains",
-                    schemas.DOMAINS,
-                    "domain_id",
-                    ok.select(
-                        F.xxhash64("host").alias("domain_id"),
-                        F.col("host").alias("domain"),
-                    ),
+        rd.sink(contents, "contents")
+        # sites grows with the crawl (≈ fetched pages), so its insert
+        # check gets the seen treatment: a bucketed site_id key-state
+        # table per round, co-partitioned anti-join (zero exchange on
+        # the state side), compacted on the seen cadence. The sink rows
+        # themselves stay per-round new-keys-only parquet
+        # (glob-queryable). domains/content_types are small dims — glob
+        # read is fine.
+        sites_parts = prev.get("sites_parts", [])
+        key_dfs = [
+            self.state.read_bucketed(
+                self.spark, p, SITES_KEYS_DDL, rd.n_buckets, bucket_col="site_id"
+            )
+            for p in sites_parts
+        ]
+        sites_new = ops.anti_join_parts(
+            ok.select("site_id", F.col("url_norm").alias("url")).dropDuplicates(
+                ["site_id"]
+            ),
+            key_dfs,
+            key="site_id",
+        )
+        rd.sink(sites_new, "sites")
+        rd.stats["sites_parts"] = self._key_state(
+            rd, sites_new.select("site_id"), key_dfs, sites_parts,
+            "sites_keys", "sites_keys", "site_id",
+        )
+        dims = [
+            (
+                "domains",
+                schemas.DOMAINS,
+                "domain_id",
+                ok.select(
+                    F.xxhash64("host").alias("domain_id"),
+                    F.col("host").alias("domain"),
                 ),
-                (
-                    "content_types",
-                    schemas.CONTENT_TYPES,
-                    "content_type_id",
-                    ok.select(
-                        F.xxhash64("content_type").alias("content_type_id"),
-                        "content_type",
-                    ),
+            ),
+            (
+                "content_types",
+                schemas.CONTENT_TYPES,
+                "content_type_id",
+                ok.select(
+                    F.xxhash64("content_type").alias("content_type_id"),
+                    "content_type",
                 ),
-            ]
-            for dim_name, dim_schema, key, dim_df in dims:
-                d = dim_df.dropDuplicates([key])
-                # guard on files actually existing: resuming a state
-                # dir whose earlier rounds never wrote this dim (sink
-                # newly enabled) must insert all keys, not fail the read
-                if r > 1 and self.state.sink_exists(dim_name):
-                    existing = self.spark.read.schema(dim_schema).parquet(
-                        self.state.sink_glob(dim_name)
-                    )
-                    d = d.join(existing.select(key), key, "left_anti")
-                pending.append((d, dim_name))
-
-        if cfg.write_blobs:
-            # Content-addressed store WITHOUT shuffling the fat bodies:
-            # pick one winner (sha1, url) with a SKINNY map-side-combined
-            # aggregate, anti-join winners against the store, then join
-            # the winner keys back against the persisted ok frame — the
-            # html column never moves (dropDuplicates(sha1) would
-            # shuffle every body by sha1). Winner set ≈ round size;
-            # broadcast below the same threshold as the fetch batch.
-            blob_glob = self.state.sink_glob("content_blobs")
-            winners = ok.groupBy("sha1").agg(F.min("url_norm").alias("_w"))
-            if r > 1 and self.state.sink_exists("content_blobs"):
-                existing = self.spark.read.schema(schemas.CONTENT_BLOBS).parquet(blob_glob)
-                winners = winners.join(existing.select("sha1"), "sha1", "left_anti")
-            # winner rows (sha1 + url) are the same scale as the batch;
-            # reuse its byte estimate for the broadcast decision
-            if broadcast_batch:
-                winners = F.broadcast(winners)
-            # join the winner URLS back against the fat cache: sha1
-            # comes from the (skinny) winner side — the bodies are
-            # neither shuffled nor re-hashed.
-            new_blobs = (
-                gated.select("url_norm", F.col("html").alias("content"))
-                .join(winners, F.col("url_norm") == F.col("_w"))
-                .select("sha1", "content")
-            )
-            pending.append((new_blobs, "content_blobs"))
-
-        # ---- P7 media branch → U5/U6 ----------------------------------
-        err_media = None
-        hashed = None
-        if cfg.media:
-            # pure-JVM magic-byte gate (equivalent to the WHATWG sniff
-            # for these two types) — avoids chaining a python sniff
-            # stage in front of the python media kernels
-            png_sig = F.expr("substring(html, 1, 8)") == F.lit(b"\x89PNG\r\n\x1a\n")
-            jpg_sig = F.expr("substring(html, 1, 3)") == F.lit(b"\xff\xd8\xff")
-            imgs = (
-                gated.filter(F.col("gate") == "ok")
-                .filter(png_sig | jpg_sig)
-                .select(
-                    "url_norm",
-                    F.xxhash64("url_norm", F.lit(r)).alias("content_id"),
-                    "html",
-                    F.when(png_sig, "image/png").otherwise("image/jpeg").alias(
-                        "content_type"
-                    ),
+            ),
+        ]
+        for dim_name, dim_schema, key, dim_df in dims:
+            d = dim_df.dropDuplicates([key])
+            # guard on files actually existing: resuming a state dir
+            # whose earlier rounds never wrote this dim (sink newly
+            # enabled) must insert all keys, not fail the read
+            if r > 1 and self.state.sink_exists(dim_name):
+                existing = self.spark.read.schema(dim_schema).parquet(
+                    self.state.sink_glob(dim_name)
                 )
-            )
-            hashed = imgs.withColumn("ph", phash_udf("html", "content_type")).withColumn(
-                "ex", exif_udf("html")
-            ).select("url_norm", "content_id", "ph", "ex").persist(_CACHE)
-            phashes = hashed.filter(F.col("ph.error").isNull()).select(
-                "content_id",
-                F.col("ph.ahash").alias("ahash"),
-                F.col("ph.dhash").alias("dhash"),
-                F.col("ph.phash").alias("phash"),
-            )
-            pending.append((phashes, "perceptual_hashes"))
-            exifs = hashed.filter(F.col("ex.present")).select(
-                "content_id",
-                F.col("ex.camera").alias("camera"),
-                F.col("ex.ts").alias("ts"),
-                F.col("ex.lat").alias("lat"),
-                F.col("ex.long").alias("long"),
-            )
-            pending.append((exifs, "exif_info"))
-            err_media = hashed.filter(F.col("ph.error").isNotNull()).select(
-                F.lit(r).alias("round"),
-                F.col("url_norm").alias("url"),
-                F.lit(schemas.ERROR_CODES["ErrorPerceptualHash"]).cast("int").alias("error_code"),
-                F.col("ph.error").alias("error_text"),
-            )
-            # S11 faces sink: one row per detected face per image
-            # (reference html.go:146-159 → faceRecognition.go:13-19,
-            # Face table DDL database.go:134). Detector is pluggable
-            # (no model ships in this sandbox — see media/faces.py).
-            if cfg.face_detector != "none":
-                from ..media.faces import detect_faces
+                d = d.join(existing.select(key), key, "left_anti")
+            rd.sink(d, dim_name)
 
-                faces = detect_faces(
-                    imgs, body_col="html", id_col="content_id",
-                    detector=cfg.face_detector,
-                )
-                pending.append((faces, "faces"))
+    def _key_state(
+        self,
+        rd: _Round,
+        delta: DataFrame,
+        part_dfs: list[DataFrame],
+        parts: list[str],
+        delta_name: str,
+        full_name: str,
+        bucket_col: str,
+    ) -> list[str]:
+        """Queue this round's part of a bucketed key-state table (seen,
+        sites_keys) and return the table's new part list: the live parts
+        plus ``delta``, or on the compaction cadence one rewritten table
+        merging ``delta`` with every live part."""
+        if rd.r % self.cfg.compact_seen_every == 0:
+            rd.sink(_union([delta, *part_dfs]), full_name, bucket_col)
+            return [f"r{rd.r:05d}/{full_name}"]
+        rd.sink(delta, delta_name, bucket_col)
+        return parts + [f"r{rd.r:05d}/{delta_name}"]
 
-        # ---- robots self-ingestion (north_rule): parse rules out of
-        # robots.txt bodies fetched THIS round; they are sunk for the
-        # next rounds AND applied to this round's own candidates below
-        # (a newly discovered host's robots is prefetched at
-        # PRIORITY_ROBOTS, so its rules usually land with or before
-        # the host's first content pages).
-        round_robots = None
-        if cfg.fetch_robots_txt:
-            from ..functions.robots import robots_rules as parse_robots
+    def _blob_sink(
+        self, rd: _Round, ok: DataFrame, gated: DataFrame, broadcast_batch: bool
+    ) -> None:
+        """S7 content-addressed blob store WITHOUT shuffling the fat
+        bodies: pick one winner (sha1, url) with a SKINNY
+        map-side-combined aggregate, anti-join winners against the
+        store, then join the winner keys back against the fat rows —
+        the html column never moves (dropDuplicates(sha1) would shuffle
+        every body by sha1)."""
+        winners = ok.groupBy("sha1").agg(F.min("url_norm").alias("_w"))
+        if rd.r > 1 and self.state.sink_exists("content_blobs"):
+            existing = self.spark.read.schema(schemas.CONTENT_BLOBS).parquet(
+                self.state.sink_glob("content_blobs")
+            )
+            winners = winners.join(existing.select("sha1"), "sha1", "left_anti")
+        # winner rows (sha1 + url) are the same scale as the batch;
+        # reuse its byte estimate for the broadcast decision
+        if broadcast_batch:
+            winners = F.broadcast(winners)
+        # sha1 comes from the (skinny) winner side — the bodies are
+        # neither shuffled nor re-hashed
+        new_blobs = (
+            gated.select("url_norm", F.col("html").alias("content"))
+            .join(winners, F.col("url_norm") == F.col("_w"))
+            .select("sha1", "content")
+        )
+        rd.sink(new_blobs, "content_blobs")
 
-            robots_bodies = gated.filter(
-                (F.col("gate") == "ok")
-                & (path_expr("url_norm") == "/robots.txt")
-            ).select("host", "html")
-            round_robots = parse_robots(
-                robots_bodies, host_col="host", body_col="html", round_col=r
-            ).persist(_CACHE)
-            pending.append((round_robots, "robots"))
+    def _media(self, rd: _Round, gated: DataFrame) -> DataFrame | None:
+        """P7 media branch → U5/U6 hashes, EXIF and faces. Returns the
+        hash-failure error rows (None with media off)."""
+        cfg = self.cfg
+        if not cfg.media:
+            return None
+        # pure-JVM magic-byte gate (equivalent to the WHATWG sniff for
+        # these two types) — avoids chaining a python sniff stage in
+        # front of the python media kernels
+        png_sig = F.expr("substring(html, 1, 8)") == F.lit(b"\x89PNG\r\n\x1a\n")
+        jpg_sig = F.expr("substring(html, 1, 3)") == F.lit(b"\xff\xd8\xff")
+        imgs = (
+            gated.filter(F.col("gate") == "ok")
+            .filter(png_sig | jpg_sig)
+            .select(
+                "url_norm",
+                F.xxhash64("url_norm", F.lit(rd.r)).alias("content_id"),
+                "html",
+                F.when(png_sig, "image/png").otherwise("image/jpeg").alias(
+                    "content_type"
+                ),
+            )
+        )
+        hashed = rd.cache(
+            imgs.withColumn("ph", phash_udf("html", "content_type"))
+            .withColumn("ex", exif_udf("html"))
+            .select("url_norm", "content_id", "ph", "ex")
+        )
+        phashes = hashed.filter(F.col("ph.error").isNull()).select(
+            "content_id",
+            F.col("ph.ahash").alias("ahash"),
+            F.col("ph.dhash").alias("dhash"),
+            F.col("ph.phash").alias("phash"),
+        )
+        rd.sink(phashes, "perceptual_hashes")
+        exifs = hashed.filter(F.col("ex.present")).select(
+            "content_id",
+            F.col("ex.camera").alias("camera"),
+            F.col("ex.ts").alias("ts"),
+            F.col("ex.lat").alias("lat"),
+            F.col("ex.long").alias("long"),
+        )
+        rd.sink(exifs, "exif_info")
+        # S11 faces sink: one row per detected face per image
+        # (reference html.go:146-159 → faceRecognition.go:13-19, Face
+        # table DDL database.go:134). Detector is pluggable (no model
+        # ships in this sandbox — see media/faces.py).
+        if cfg.face_detector != "none":
+            from ..media.faces import detect_faces
 
-        # ---- P5/P6 + U1: the flat link/keyword rows are the kind=1
-        # slice of the fused pass above (one row per keyword,
-        # all-scalar Arrow transfer; links/keywords are shuffle-free
-        # filters of the same checkpointed frame). The P5 html-sniff
-        # gate and P6's image-suffix skip both run INSIDE the kernel —
-        # still exactly one Python stage per round.
+            faces = detect_faces(
+                imgs, body_col="html", id_col="content_id",
+                detector=cfg.face_detector,
+            )
+            rd.sink(faces, "faces")
+        return _error_rows(
+            hashed.filter(F.col("ph.error").isNotNull()),
+            rd.r,
+            schemas.ERROR_CODES["ErrorPerceptualHash"],
+            F.col("ph.error"),
+        )
+
+    def _robots_ingest(self, rd: _Round, gated: DataFrame) -> DataFrame | None:
+        """Robots self-ingestion (north_rule): parse rules out of the
+        robots.txt bodies fetched THIS round; they are sunk for the next
+        rounds AND applied to this round's own candidates (a newly
+        discovered host's robots is prefetched at PRIORITY_ROBOTS, so
+        its rules usually land with or before the host's first content
+        pages). None unless cfg.fetch_robots_txt."""
+        rd.stats["robots"] = None
+        if not self.cfg.fetch_robots_txt:
+            return None
+        from ..functions.robots import robots_rules as parse_robots
+
+        robots_bodies = gated.filter(
+            (F.col("gate") == "ok") & (path_expr("url_norm") == "/robots.txt")
+        ).select("host", "html")
+        round_robots = rd.cache(
+            parse_robots(robots_bodies, host_col="host", body_col="html", round_col=rd.r)
+        )
+        rd.sink(round_robots, "robots")
+        # rules-table snapshot pointer: robots rules fetched this round
+        # (the cross-round view is the union of these sinks)
+        rd.stats["robots"] = f"r{rd.r:05d}/robots"
+        return round_robots
+
+    def _links(self, rd: _Round, combined: DataFrame) -> DataFrame:
+        """P5/P6 + U1 link and keyword rows, rating (J5+A1) and
+        priority (P1/P2). Returns the cached rated links."""
+        r = rd.r
+        # The flat link/keyword rows are the kind=1 slice of the fused
+        # pass (one row per keyword, all-scalar Arrow transfer;
+        # links/keywords are shuffle-free filters of the same
+        # checkpointed frame). The P5 html-sniff gate and P6's
+        # image-suffix skip both run INSIDE the kernel — still exactly
+        # one Python stage per round.
         # NOTE: case-SENSITIVE suffix skip — html.go:169 uses
         # strings.HasSuffix on the raw URL (only the priority rule at
         # crawling.go:20 lowercases first).
@@ -889,25 +974,23 @@ class CrawlEngine:
                 F.xxhash64("origin_url", "dest_url", "pos", F.lit(r)),
             )
         )
-
         keywords = flat.filter(F.col("kw_idx").isNotNull()).select(
             "link_id", "visibility", "text"
         )
-        pending.append((keywords, "link_keywords"))
+        rd.sink(keywords, "link_keywords")
 
         if len(self.flagged_rows) <= 512:
             # FUSED rating (r6): one hash aggregate over the flat frame
-            # replaces the former keywords-groupBy exchange PLUS the
+            # instead of a keywords-groupBy exchange PLUS a
             # links⋈ratings join (its own exchange + sort). Map-side
             # partial aggregation collapses the per-keyword rows into
             # one row per link before the exchange, so exactly one
-            # link-sized shuffle remains where three link-sized stages
-            # ran before (guide §2.4/§2.3). Equivalence: the per-row
-            # term is 0.0 for NULL-text (zero-keyword) rows — exactly
-            # the coalesce(rating, 0.0) of the join form — and the
-            # summed terms are small exact integers in double, so the
-            # sum is order-independent (pinned by the e2e simulator
-            # equality tests).
+            # link-sized shuffle remains (guide §2.4/§2.3).
+            # Equivalence: the per-row term is 0.0 for NULL-text
+            # (zero-keyword) rows — exactly the coalesce(rating, 0.0)
+            # of the join form — and the summed terms are small exact
+            # integers in double, so the sum is order-independent
+            # (pinned by the e2e simulator equality tests).
             term = ops.rating_term_expr(self.flagged_rows)
             rated = flat.groupBy(
                 "link_id", "origin_url", "depth", "time_found", "dest_url"
@@ -922,7 +1005,7 @@ class CrawlEngine:
             rated = links.join(ratings, "link_id", "left").withColumn(
                 "rating", F.coalesce(F.col("rating"), F.lit(0.0))
             )
-        rated = ops.with_link_priority(rated).persist(_CACHE)
+        rated = rd.cache(ops.with_link_priority(rated))
 
         link_rels = rated.select(
             F.lit(r).alias("round"),
@@ -934,9 +1017,18 @@ class CrawlEngine:
             "rating",
             "time_found",
         )
-        pending.append((link_rels, "link_rels"))
+        rd.sink(link_rels, "link_rels")
+        return rated
 
-        # ---- candidates: A5/A6 collapse → robots → J2 seen check ------
+    def _candidates(
+        self,
+        rated: DataFrame,
+        rules: DataFrame | None,
+        round_robots: DataFrame | None,
+    ) -> DataFrame:
+        """A5/A6 collapse of the rated links' destinations, then the
+        robots filter under the round-start rules merged with the ones
+        fetched this round."""
         cands = rated.select(
             F.col("dest_url").alias("url_norm"),
             "priority",
@@ -947,76 +1039,80 @@ class CrawlEngine:
             .withColumn("host", host_expr("url_norm"))
             .withColumn("url_hash", F.xxhash64("url_norm"))
         )
-        robots_eff = robots_rules_df
         if round_robots is not None:
             fresh = round_robots.withColumn("_src", F.lit(1))
-            robots_eff = self._latest_per_host(
+            rules = self._latest_per_host(
                 fresh
-                if robots_eff is None
-                else robots_eff.withColumn("_src", F.lit(0)).unionByName(fresh)
+                if rules is None
+                else rules.withColumn("_src", F.lit(0)).unionByName(fresh)
             )
-        if robots_eff is not None:
-            cands = ops.robots_filter(cands, robots_eff)
-        if cfg.fetch_robots_txt:
+        if rules is not None:
+            cands = ops.robots_filter(cands, rules)
+        if self.cfg.fetch_robots_txt:
             # prefetch robots.txt for every host seen among candidates
             # (added AFTER the filter — robots.txt itself is always
             # fetchable per RFC 9309); the seen check dedups across
             # rounds so each host's robots is fetched once.
-            rob_c = (
-                cands.groupBy("host")
-                .agg(
-                    F.max(protocol_expr("url_norm")).alias("_scheme"),
-                    F.min("depth").alias("depth"),
-                )
-                .filter(F.length("_scheme") > 0)
-                .select(
-                    F.concat(
-                        F.col("_scheme"),
-                        F.lit("://"),
-                        F.col("host"),
-                        F.lit("/robots.txt"),
-                    ).alias("url_norm"),
-                    F.lit(ops.PRIORITY_ROBOTS).alias("priority"),
-                    "depth",
-                    "host",
-                )
-                .withColumn("url_hash", F.xxhash64("url_norm"))
-            )
-            cands = cands.unionByName(rob_c)
+            cands = cands.unionByName(_robots_txt_urls(cands))
+        return cands
 
-        probed = None
-        if cfg.bloom_prefilter and prev["stats"].get("bloom"):
-            shards = self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
-                os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
+    def _bloom_shards(self, prev: dict) -> DataFrame:
+        return self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
+            os.path.join(self.state.root, "rounds", prev["bloom"])
+        )
+
+    def _seen(
+        self, rd: _Round, prev: dict, cands: DataFrame, seen_dfs: list[DataFrame]
+    ) -> DataFrame:
+        """J2 seen check (U8 bloom pre-filter + exact anti-join) and the
+        seen-state write. Returns the cached never-seen candidates."""
+        if self.cfg.bloom_prefilter and prev.get("bloom"):
+            probed = rd.cache(
+                bloom_ops.probe_shards(
+                    cands, self._bloom_shards(prev), rd.n_buckets, rd.shard_bits
+                )
             )
-            probed = bloom_ops.probe_shards(
-                cands, shards, cfg.n_buckets, cfg.shard_bits
-            ).persist(_CACHE)
             negatives = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
             positives = probed.filter(F.col("maybe_seen")).drop("maybe_seen", "bucket")
             # exact check for bloom-positives only: co-partitioned
             # anti-joins against the bucketed seen parts — the seen
             # side is never shuffled OR broadcast-collected (in steady
-            # state positives ≈ the whole candidate set, so the old
-            # broadcast-the-positives shortcut was an OOM at scale).
+            # state positives ≈ the whole candidate set, so
+            # broadcasting the positives would OOM at scale).
             new_from_pos = ops.seen_anti_join_parts(positives, seen_dfs)
-            new = negatives.unionByName(new_from_pos).persist(_CACHE)
+            new = rd.cache(negatives.unionByName(new_from_pos))
         else:
-            new = ops.seen_anti_join_parts(cands, seen_dfs).persist(_CACHE)
+            new = rd.cache(ops.seen_anti_join_parts(cands, seen_dfs))
+        rd.stats["seen_parts"] = self._key_state(
+            rd,
+            new.select("url_norm", "url_hash", F.lit(rd.r).alias("round_seen")),
+            seen_dfs,
+            prev["seen_parts"],
+            "seen_delta",
+            "seen_full",
+            "url_hash",
+        )
+        return new
 
-        seen_delta = new.select("url_norm", "url_hash", F.lit(r).alias("round_seen"))
+    def _frontier(
+        self,
+        rd: _Round,
+        prev: dict,
+        frontier: DataFrame,
+        batch_use: DataFrame,
+        new: DataFrame,
+    ) -> DataFrame:
+        """Frontier state write. Returns this round's new frontier rows.
 
-        # compaction: every N rounds rewrite one merged seen table
-        if r % cfg.compact_seen_every == 0:
-            merged = seen_delta
-            for d in seen_dfs:
-                merged = merged.unionByName(d)
-            pending.append((merged, "seen_full"))
-            new_seen_parts = [f"r{r:05d}/seen_full"]
-        else:
-            pending.append((seen_delta, "seen_delta"))
-            new_seen_parts = seen_parts + [f"r{r:05d}/seen_delta"]
-
+        Incremental frontier (see _frontier_view): normal rounds write
+        ONLY the round delta (new urls) + a skinny tombstone table of
+        drained url_hashes — O(round activity), not O(frontier). The
+        full table is rewritten (and tombstones folded in) on the
+        compaction cadence. Held rows (robots-first hold-back) are NOT
+        in ``batch_use``: they survive both the full-rewrite anti-join
+        and the tombstones.
+        """
+        r = rd.r
         new_frontier = new.filter(F.col("priority") > 0).select(
             "url_norm",
             "host",
@@ -1025,150 +1121,91 @@ class CrawlEngine:
             F.lit(r).alias("round_added"),
             "url_hash",
         )
-        # Incremental frontier (see _frontier_view): normal rounds
-        # write ONLY the round delta (new urls) + a skinny tombstone
-        # table of drained url_hashes — O(round activity), not
-        # O(frontier). The full table is rewritten (and tombstones
-        # folded in) on the seen-compaction cadence.
-        # held rows (robots-first hold-back) are NOT in batch_use: they
-        # survive both the full-rewrite anti-join and the tombstones.
-        if r % cfg.compact_seen_every == 0:
-            rest = frontier.join(
-                batch_use.select("url_hash"), "url_hash", "left_anti"
-            )
-            pending.append((rest.unionByName(new_frontier), "frontier_full"))
-            new_frontier_parts = [f"r{r:05d}/frontier_full"]
-            new_drained_parts: list[str] = []
+        if r % self.cfg.compact_seen_every == 0:
+            rest = frontier.join(batch_use.select("url_hash"), "url_hash", "left_anti")
+            rd.sink(rest.unionByName(new_frontier), "frontier_full", "url_hash")
+            rd.stats["frontier_parts"] = [f"r{r:05d}/frontier_full"]
+            rd.stats["drained_parts"] = []
         else:
-            pending.append((new_frontier, "frontier_delta"))
-            drained_delta = batch_use.select(
-                "url_hash", F.lit(r).alias("drained_round")
+            rd.sink(new_frontier, "frontier_delta", "url_hash")
+            drained = batch_use.select("url_hash", F.lit(r).alias("drained_round"))
+            rd.sink(drained, "drained", "url_hash")
+            rd.stats["frontier_parts"] = prev["frontier_parts"] + [f"r{r:05d}/frontier_delta"]
+            rd.stats["drained_parts"] = prev.get("drained_parts", []) + [f"r{r:05d}/drained"]
+        return new_frontier
+
+    def _bloom(self, rd: _Round, prev: dict, new: DataFrame) -> None:
+        """U8: merge this round's new urls into the bloom shards."""
+        rd.stats["bloom"] = None
+        if self.cfg.bloom_prefilter:
+            shards = bloom_ops.build_shards(
+                new.select("url_norm"), rd.n_buckets, rd.shard_bits,
+                self._bloom_shards(prev),
             )
-            pending.append((drained_delta, "drained"))
-            new_frontier_parts = frontier_parts + [f"r{r:05d}/frontier_delta"]
-            new_drained_parts = drained_parts + [f"r{r:05d}/drained"]
+            rd.sink(shards, "bloom")
+            rd.stats["bloom"] = f"r{rd.r:05d}/bloom"
 
-        # ---- U8: bloom shard merge ------------------------------------
-        bloom_rel = None
-        if cfg.bloom_prefilter:
-            old_shards = self.spark.read.schema(schemas.BLOOM_SHARDS).parquet(
-                os.path.join(self.state.root, "rounds", prev["stats"]["bloom"])
-            )
-            shards2 = bloom_ops.build_shards(
-                new.select("url_norm"), cfg.n_buckets, cfg.shard_bits, old_shards
-            )
-            pending.append((shards2, "bloom"))
-            bloom_rel = f"r{r:05d}/bloom"
+    def _flush(self, rd: _Round) -> None:
+        """Run the queued sink writes concurrently: each write is its own
+        Spark job, the persisted parents are materialized once under the
+        cache's per-partition locks, and the scheduler overlaps the jobs,
+        hiding the per-job launch latency a dozen sequential ~0.5 s jobs
+        would add to every small round."""
 
-        # ---- errors / metrics / stats ----------------------------------
-        errors = err_gate
-        if err_media is not None:
-            errors = errors.unionByName(err_media)
-        if err_robots is not None:
-            errors = errors.unionByName(err_robots)
-        pending.append((errors, "errors"))
+        def write(sink):
+            df, name, bucket_col = sink
+            with rd._phase(f"sink:{name}", rd.sink_ms):
+                if bucket_col is None:
+                    self._write(df, rd.r, name)
+                else:
+                    self.state.write_bucketed(
+                        df, rd.r, name, rd.n_buckets, bucket_col=bucket_col
+                    )
 
-        if cfg.lineage_metrics:
-            lineage = self._lineage(
-                {
-                    "batch": (batch, F.length("url_norm")),
-                    "fetched_ok": (ok, F.col("size")),
-                    "links": (rated, F.length("dest_url")),
-                    "new_seen": (new, F.length("url_norm")),
-                },
-                r,
-            )
-            pending.append((lineage, "metrics"))
+        with rd._phase("flush"), ThreadPoolExecutor(max_workers=WRITE_THREADS) as pool:
+            list(pool.map(write, rd.sinks))
 
-        # ---- flush all sink writes concurrently (persisted parents are
-        # materialized once under the cache's per-partition locks; the
-        # scheduler overlaps the jobs, hiding per-job launch latency).
-        from concurrent.futures import ThreadPoolExecutor
-
-        t_preflush = time.monotonic()
-        bucketed_names = {
-            "frontier_full",
-            "frontier_delta",
-            "drained",
-            "seen_delta",
-            "seen_full",
-        }
-
-        sink_ms: dict[str, int] = {}
-
-        def _flush(t):
-            df, name = t
-            # job description is thread-local — each concurrent sink
-            # write is labelled in the UI/event log (guide §1.5)
-            self.spark.sparkContext.setJobDescription(f"r{r:05d}:sink:{name}")
-            ts = time.monotonic()
-            if name == "sites_keys":
-                self.state.write_bucketed(
-                    df, r, name, cfg.n_buckets, bucket_col="site_id"
-                )
-            elif name in bucketed_names:
-                self.state.write_bucketed(df, r, name, cfg.n_buckets)
-            else:
-                self._write(df, r, name)
-            sink_ms[name] = int((time.monotonic() - ts) * 1000)
-
-        # 12 concurrent writer threads: the dozen per-round sink jobs
-        # are individually tiny, so at 6 threads the flush ran two
-        # serial waves whose second wave was latency, not throughput
-        # (the scheduler overlaps all jobs fine; measured r6).
-        with ThreadPoolExecutor(max_workers=int(cfg.extra.get("write_threads", 12))) as pool:
-            list(pool.map(_flush, pending))
-        t_flush = time.monotonic()
-
-        # Round counters: ONE post-flush aggregation job over the (now
-        # materialized) cached frames — replaces the four standalone
-        # count jobs the round used to run before flushing.
+    def _commit(self, rd: _Round, new_frontier: DataFrame) -> dict:
+        """Round counters, round_stats sink, atomic manifest commit and,
+        on the compaction cadence, expiry of superseded state."""
+        r, cfg = rd.r, self.cfg
         # Round counters from the parquet FOOTERS of the sinks just
-        # written (each sink is 1:1 with the frame the old counter job
-        # counted: contents=ok, link_rels=rated, errors, frontier_delta
-        # =new frontier rows) — no Spark job, no cache re-scan. The one
-        # count not derivable from a sink (new-frontier rows folded
-        # into a compaction's full rewrite) runs as a single cached-
-        # scan job on compaction rounds only.
-        pages_fetched = self.state.sink_rows(r, "contents")
-        links_found = self.state.sink_rows(r, "link_rels")
-        n_errors = self.state.sink_rows(r, "errors")
-        bytes_ok = (
-            self.state.sink_column_sum(r, "contents", "size")
-            if pages_fetched
-            else 0
-        )
-        if r % cfg.compact_seen_every == 0:
-            self.spark.sparkContext.setJobDescription(f"r{r:05d}:counters")
-            n_new_frontier = new_frontier.count()
-        else:
-            n_new_frontier = self.state.sink_rows(r, "frontier_delta")
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        stats = {
-            "frontier_parts": new_frontier_parts,
-            "drained_parts": new_drained_parts,
-            "sites_parts": new_sites_parts,
-            "seen_parts": new_seen_parts,
-            # rules-table snapshot pointer: robots rules fetched this
-            # round (the cross-round view is the union of these sinks)
-            "robots": f"r{r:05d}/robots" if round_robots is not None else None,
-            "bloom": bloom_rel,
-            "pages_fetched": pages_fetched,
-            "links_found": links_found,
-            "new_frontier": n_new_frontier,
-            "errors": n_errors,
-            "batch": n_batch,
-            "wall_ms": wall_ms,
-            "n_buckets": cfg.n_buckets,
-            # feedback for next round's data-proportional shuffle sizing
-            "avg_page_bytes": round(bytes_ok / pages_fetched, 1)
-            if pages_fetched
-            else float(cfg.est_page_bytes),
-            "shuffle_partitions": shuffle_parts,
-        }
-        t_counters = time.monotonic()
+        # written (contents = fetched pages, link_rels = links, errors,
+        # frontier_delta = new frontier rows) — no Spark job, no cache
+        # re-scan. The one count not derivable from a sink (new-frontier
+        # rows folded into a compaction's full rewrite) runs as a single
+        # cached-scan job on compaction rounds only.
+        with rd._phase("counters"):
+            pages_fetched = self.state.sink_rows(r, "contents")
+            links_found = self.state.sink_rows(r, "link_rels")
+            n_errors = self.state.sink_rows(r, "errors")
+            bytes_ok = (
+                self.state.sink_column_sum(r, "contents", "size")
+                if pages_fetched
+                else 0
+            )
+            if r % cfg.compact_seen_every == 0:
+                n_new_frontier = new_frontier.count()
+            else:
+                n_new_frontier = self.state.sink_rows(r, "frontier_delta")
         self.spark.sparkContext.setJobDescription(None)
+        wall_ms = _ms(rd.t0)
+        stats = rd.stats
+        stats.update(
+            pages_fetched=pages_fetched,
+            links_found=links_found,
+            new_frontier=n_new_frontier,
+            errors=n_errors,
+            wall_ms=wall_ms,
+            n_buckets=rd.n_buckets,
+            shard_bits=rd.shard_bits,
+            # feedback for next round's data-proportional shuffle sizing
+            avg_page_bytes=round(bytes_ok / pages_fetched, 1)
+            if pages_fetched
+            else float(EST_PAGE_BYTES),
+            sink_ms=rd.sink_ms,
+            phase_ms=rd.phase_ms,
+        )
         # round_stats is ONE driver-known row — writing it through a
         # Spark job cost a full job launch per round; pyarrow writes
         # the identical parquet schema directly (readers are unchanged:
@@ -1176,28 +1213,11 @@ class CrawlEngine:
         self.state.write_round_stats(
             r, pages_fetched, links_found, n_new_frontier, n_errors, wall_ms
         )
-        if cfg.extra.get("phase_timings"):
-            stats["sink_ms"] = sink_ms
-            stats["phase_ms"] = {
-                "pre_flush": int((t_preflush - t0) * 1000),
-                "flush": int((t_flush - t_preflush) * 1000),
-                "counters": int((t_counters - t_flush) * 1000),
-            }
         self.state.commit_round(r, stats)
-        if cfg.gc_state and r % cfg.compact_seen_every == 0:
+        if r % cfg.compact_seen_every == 0:
             stats["gc_removed"] = len(
                 self.state.gc_state(r, keep_rounds=1, spark=self.spark)
             )
-
-        # batch/combined are localCheckpoint'd (not persisted) — their
-        # blocks are released by the ContextCleaner when the round's
-        # references drop
-        unpersist = [meta, rated, new, hashed, probed, round_robots]
-        if cfg.cache_fat:
-            unpersist.append(gated)
-        for df in unpersist:
-            if df is not None:
-                df.unpersist()
         stats["done"] = False
         stats["round"] = r
         return stats

@@ -16,6 +16,9 @@ from pyspark.sql import SparkSession
 
 # Reference design envelope: 20 MB per-page cap (main.go:20).
 MAX_FILESIZE = 20_000_000
+# Average page size assumed before any page of a crawl is measured: the
+# crawl's round-1 shuffle sizing and this module's input-volume guess.
+EST_PAGE_BYTES = 8192
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -62,7 +65,7 @@ def _expected_input_bytes(input_bytes: int | None) -> int:
     process, for sizing allocation-rate-dependent JVM geometry (the
     GC nursery below). Priority: explicit caller value >
     $SPARK_GRAFT_INPUT_BYTES > $SPARK_GRAFT_BENCH_PAGES (the declared
-    bench-corpus size knob) x the engine's est_page_bytes default.
+    bench-corpus size knob) x EST_PAGE_BYTES.
     0 = unknown (small-scale defaults apply)."""
     if input_bytes:
         return int(input_bytes)
@@ -76,7 +79,7 @@ def _expected_input_bytes(input_bytes: int | None) -> int:
         pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "0"))
     except ValueError:
         pages = 0
-    return pages * 8192  # CrawlConfig.est_page_bytes default
+    return pages * EST_PAGE_BYTES
 
 
 def _mem_to_g(mem: str) -> int:

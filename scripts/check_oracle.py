@@ -1,15 +1,18 @@
 """Local stand-in for the driver's correctness gate: runs every
 ``queries()`` entry and its ``oracle_sql()`` twin side-by-side and
-compares row count, column names, and order-insensitive values.
+compares column names, row count, and order-insensitive values; an
+oracle-backed query must also return rows. Runs on
+``local[$SPARK_GRAFT_CPUS]`` (default 8).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -35,7 +38,10 @@ def rows_key(rows, cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark(
+        app_name="oracle-check", master=f"local[{cpus}]", shuffle_partitions=8
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
@@ -73,6 +79,8 @@ def main():
             problems.append(f"cols {sorted(scols)} != {sorted(dcols)}")
         if len(srows) != len(drows):
             problems.append(f"rowcount {len(srows)} != {len(drows)}")
+        elif not srows:
+            problems.append("oracle-backed query returned 0 rows")
         if not problems:
             sk, dk = rows_key(srows, scols), rows_key(drows, dcols)
             if sk != dk:

@@ -263,6 +263,18 @@ def test_lineage_metrics_written(spark, run_pair):
     assert agg["fetched_ok"][0] > 0  # real payload sizes summed
 
 
+def test_phase_timings_in_manifest(run_pair):
+    """Every fetch round's manifest carries its phase wall times and one
+    sink timing per table the round wrote."""
+    eng, stats, _, _ = run_pair
+    for s in stats:
+        if s.get("done"):
+            continue
+        m = eng.state.manifest(s["round"])
+        assert {"pre_flush", "flush", "counters"} <= set(m["stats"]["phase_ms"])
+        assert set(m["stats"]["sink_ms"]) == set(m["tables"]) - {"round_stats"}
+
+
 def test_resume_identical_to_uninterrupted(spark, corpus, corpus_dir, tmp_path_factory):
     """Kill after round 2 (simulate an uncommitted round 3), resume,
     and assert final state matches an uninterrupted run."""
@@ -315,6 +327,39 @@ def test_resume_identical_to_uninterrupted(spark, corpus, corpus_dir, tmp_path_f
     assert seen_full == seen_part
 
 
+def test_resume_keeps_bootstrap_state_layout(spark, corpus, corpus_dir, tmp_path_factory):
+    """A resume under another bucket count and bloom shard size keeps
+    the layout the crawl bootstrapped with. Probing the bloom with
+    other values tests candidates against another bucket's bits; its
+    false negatives skip the exact seen check and re-fetch seen urls.
+    The simulator is the uninterrupted run (run_pair pins the engine
+    to it)."""
+    state_dir = tmp_path_factory.mktemp("state_relayout")
+    eng = _mk_engine(
+        spark, corpus_dir, state_dir, per_host_budget=5, n_buckets=8, shard_bits=1 << 16
+    )
+    eng.bootstrap()
+    eng.run_round(1)
+    eng.run_round(2)
+    eng_resume = _mk_engine(
+        spark, corpus_dir, state_dir, per_host_budget=5, n_buckets=4, shard_bits=1 << 12
+    )
+    eng_resume.run(max_rounds=MAX_ROUNDS)
+    sim_res = Simulator(corpus, per_host_budget=5, round_budget=None, use_robots=True).run(
+        max_rounds=MAX_ROUNDS
+    )
+    contents = [
+        (r["url"], r["round"])
+        for r in _read_sink(spark, state_dir, "contents", schemas.CONTENTS).collect()
+    ]
+    assert len(contents) == len(sim_res.contents)
+    assert set(contents) == sim_res.contents
+    m = eng_resume.state.manifest(eng_resume.state.latest_committed_round())["stats"]
+    assert (m["n_buckets"], m["shard_bits"]) == (8, 1 << 16)
+    seen = eng_resume._read_seen(m["seen_parts"], m["n_buckets"])
+    assert {r["url_norm"] for r in seen.select("url_norm").collect()} == sim_res.seen
+
+
 def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
     """The frontier is NEVER fully rewritten off the compaction
     cadence: each round writes only frontier_delta (this round's new
@@ -328,7 +373,7 @@ def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
         spark, corpus_dir, state_dir,
         per_host_budget=5, bloom_prefilter=False, n_buckets=8,
         compact_seen_every=100,  # never compacts in this run
-        media=False, write_blobs=False, dim_tables=False,
+        media=False,
     )
     stats = eng.run(max_rounds=6)
     fetch = [s for s in stats if not s.get("done")]

@@ -15,26 +15,10 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from scripts.check_oracle import TABLES, rows_key
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 GRADED_WINDOW = 50
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return f"{v:.6g}"
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    return str(v)
-
-
-def _key(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
 def overflow_oracle_queries():
@@ -65,5 +49,5 @@ def test_overflow_query_matches_oracle(spark, duck, name):
     dcols = [c[0] for c in ddf.description]
     assert sorted(scols) == sorted(dcols)
     assert len(srows) == len(drows) and len(srows) > 0
-    sk, dk = _key(srows, scols), _key(drows, dcols)
+    sk, dk = rows_key(srows, scols), rows_key(drows, dcols)
     assert sk == dk, [(a, b) for a, b in zip(sk, dk) if a != b][:3]

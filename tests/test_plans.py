@@ -399,41 +399,40 @@ def test_frontier_view_same_round_readd_survives(spark, tmp_path):
     assert eng._frontier_view(stats, 8).count() == 1
 
 
-def test_batch_stats_byte_estimate(spark, tmp_path):
+def test_batch_stats_byte_estimate(spark, monkeypatch):
     """Broadcast decisions are BYTE-based: _batch_stats measures
     url+host chars + fixed per-row overhead in one job, and the
-    engine broadcasts only under CrawlConfig.broadcast_max_bytes."""
-    from notjusthtml_searchengine_spark.plans.rounds import CrawlConfig, CrawlEngine
+    engine broadcasts only under rounds.BROADCAST_MAX_BYTES."""
+    from notjusthtml_searchengine_spark.plans import rounds
+    from notjusthtml_searchengine_spark.plans.rounds import CrawlEngine
 
     eng = object.__new__(CrawlEngine)  # no crawl needed — method only
-    eng.cfg = CrawlConfig(state_dir=str(tmp_path), broadcast_row_overhead=48)
     batch = spark.createDataFrame(
         [("u" * 10, "h" * 5), ("u" * 20, None)], "url_norm string, host string"
     )
     n, est = CrawlEngine._batch_stats(eng, batch)
     assert n == 2
     assert est == (10 + 5) + 20 + 48 * 2
-    # decision flips with the configured cap
-    assert est <= CrawlConfig(state_dir=".").broadcast_max_bytes
-    assert est > CrawlConfig(state_dir=".", broadcast_max_bytes=10).broadcast_max_bytes
+    assert est <= rounds.BROADCAST_MAX_BYTES
+    # the per-row overhead is read from the module constant
+    monkeypatch.setattr(rounds, "BROADCAST_ROW_OVERHEAD", 100)
+    assert CrawlEngine._batch_stats(eng, batch) == (2, (10 + 5) + 20 + 100 * 2)
 
 
-def test_data_proportional_shuffle_sizing(spark, tmp_path):
+def test_data_proportional_shuffle_sizing(spark, monkeypatch):
     """The round driver sizes spark.sql.shuffle.partitions to the
     PREDICTED round volume (batch × measured avg page bytes ×
     expansion) / target partition bytes — the sf1 rehearsal showed 8
     fixed partitions collapse N→4N efficiency to 0.685 at 10× data
     (1.5 GB partitions spill hardest at high thread counts) while
     volume-sized partitions restore 0.962."""
-    from notjusthtml_searchengine_spark.plans.rounds import CrawlConfig, CrawlEngine
+    from notjusthtml_searchengine_spark.plans import rounds
+    from notjusthtml_searchengine_spark.plans.rounds import CrawlEngine
 
     eng = object.__new__(CrawlEngine)
     eng.spark = spark
-    eng.cfg = CrawlConfig(
-        state_dir=str(tmp_path),
-        target_partition_bytes=128 << 20,
-        shuffle_row_expansion=3,
-    )
+    monkeypatch.setattr(rounds, "TARGET_PARTITION_BYTES", 128 << 20)
+    monkeypatch.setattr(rounds, "SHUFFLE_ROW_EXPANSION", 3)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     base = spark.sparkContext.defaultParallelism
     import math
@@ -470,13 +469,10 @@ def test_data_proportional_shuffle_sizing(spark, tmp_path):
         est_huge = huge * 7000.0 * 3
         assert parts >= math.ceil(est_huge / (512 << 20)), parts
         assert parts % base == 0
-        # disabled / empty prediction leaves the conf alone
-        eng.cfg = CrawlConfig(state_dir=str(tmp_path), auto_shuffle_partitions=False)
-        assert eng._size_shuffle(10_000_000, 7000.0) is None
-        eng.cfg = CrawlConfig(state_dir=str(tmp_path))
+        # an empty prediction leaves the conf alone
         assert eng._size_shuffle(0, 7000.0) is None
         # cap respected
-        eng.cfg = CrawlConfig(state_dir=str(tmp_path), max_shuffle_partitions=64)
+        monkeypatch.setattr(rounds, "MAX_SHUFFLE_PARTITIONS", 64)
         assert eng._size_shuffle(10_000_000_000, 7000.0) == 64
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
