@@ -1246,7 +1246,7 @@ piv AS (
     coalesce(max(frac) FILTER (k = 4), 0.0) AS top_4gram_char_frac
   FROM best GROUP BY doc_id)
 SELECT b.doc_id,
-  coalesce(l.n_lines, 0) AS n_lines,
+  CAST(coalesce(l.n_lines, 0) AS BIGINT) AS n_lines,
   coalesce(l.dup_line_frac, 0.0) AS dup_line_frac,
   coalesce(l.dup_line_char_frac, 0.0) AS dup_line_char_frac,
   coalesce(p.top_2gram_char_frac, 0.0) AS top_2gram_char_frac,

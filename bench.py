@@ -188,7 +188,6 @@ def run_crawl(
         # broadcast) it is pure overhead — measured at +~25% round
         # latency locally, see BENCH/BASELINE.md.
         bloom_prefilter=os.environ.get("SPARK_GRAFT_BENCH_BLOOM", "0") == "1",
-        n_buckets=32,
         shard_bits=1 << 20,
         media=False,  # text corpus; media branch exercised in tests
         lineage_metrics=False,

@@ -167,7 +167,6 @@ def main() -> None:
             per_host_budget=args.host_budget,
             use_robots=True,
             bloom_prefilter=False,
-            n_buckets=32,
             media=False,
             lineage_metrics=False,
             compact_seen_every=4,

@@ -62,7 +62,6 @@ def main() -> None:
         "--face-detector", default="none",
         help="face detector plugin: none | fake | <model name>",
     )
-    ap.add_argument("--buckets", type=int, default=CrawlConfig.n_buckets)
     ap.add_argument("--master", default=None)
     # query mode (consumer catalog over an existing state dir):
     ap.add_argument("--search-keyword", default=None, metavar="TERM",
@@ -149,7 +148,6 @@ def main() -> None:
         bloom_prefilter=not args.no_bloom,
         media=not args.no_media,
         face_detector=args.face_detector,
-        n_buckets=args.buckets,
         fetch_robots_txt=args.fetch_robots,
     )
     eng = CrawlEngine(spark, args.pages, args.seeds, args.flagged, args.robots, cfg)

@@ -42,27 +42,29 @@ _HEADING_MULT = {"h1": 10, "h2": 9, "h3": 8, "h4": 7, "h5": 6, "h6": 5, "h7": 4}
 def extract_keywords(node: Node, multiplier: int = 1) -> list[tuple[int, str]]:
     """Reference extractKeywords: [(visibility, cleaned_text), ...].
 
-    Iterative pre-order with the heading multiplier carried on the
-    stack — identical emission order and inheritance semantics to the
-    recursive form (self first, children left-to-right), without the
-    per-node Python call overhead (r6)."""
-    get_mult = _HEADING_MULT.get
+    A fast path for the dominant link shapes — an element with no
+    children or exactly one text child — computes what ``_walk_keywords``
+    computes for those trees (the raw-text-named-hN multiplier quirk on
+    the child included; the tree builders never make an empty text
+    node, so the child's raw text is non-empty). Every other shape takes
+    the walk. Pinned by a differential test."""
     if node.type != TEXT:
-        # fast path for the dominant link shapes: an element with no
-        # children or exactly one text child — line-for-line what the
-        # generic walk below computes for those trees (including the
-        # raw-text-named-hN multiplier quirk on the child)
         ch = node.children
         if not ch:
             return []
-        if len(ch) == 1:
-            c0 = ch[0]
-            if c0.type == TEXT:
-                if c0.data == "":
-                    return []
-                m = get_mult(node.data, multiplier)
-                m = get_mult(c0.data, m)
-                return [(m, go_clean(c0.data))]
+        if len(ch) == 1 and ch[0].type == TEXT:
+            data = ch[0].data
+            m = _HEADING_MULT.get(node.data, multiplier)
+            return [(_HEADING_MULT.get(data, m), go_clean(data))]
+    return _walk_keywords(node, multiplier)
+
+
+def _walk_keywords(node: Node, multiplier: int) -> list[tuple[int, str]]:
+    """The generic extractKeywords: iterative pre-order with the heading
+    multiplier carried on the stack — identical emission order and
+    inheritance semantics to the recursive form (self first, children
+    left-to-right), without the per-node Python call overhead (r6)."""
+    get_mult = _HEADING_MULT.get
     out: list[tuple[int, str]] = []
     stack = [(node, multiplier)]
     pop = stack.pop

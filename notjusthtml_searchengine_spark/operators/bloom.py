@@ -31,7 +31,11 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 
-N_HASHES = 7  # k for ~1% FP at 10 bits/key
+N_HASHES = 7  # k for ~1% FP at BITS_PER_KEY
+# shard bits per key the fill assumes: a shard of m bits holds
+# m / BITS_PER_KEY keys at ~1% FP (the crawl's bucket count is sized
+# from it, plans/rounds.py state_buckets)
+BITS_PER_KEY = 10
 
 
 def bloom_cols(df: DataFrame, url_col: str = "url_norm") -> DataFrame:

@@ -47,7 +47,14 @@ from ..media.udfs import exif_udf, phash_udf
 from ..operators import bloom as bloom_ops
 from ..operators import crawl_ops as ops
 from ..session import EST_PAGE_BYTES
-from .state import DRAINED_DDL, FRONTIER_DDL, SEEN_DDL, SITES_KEYS_DDL, CrawlState
+from .state import (
+    DRAINED_DDL,
+    FRONTIER_DDL,
+    SEEN_DDL,
+    SITES_KEYS_DDL,
+    CrawlState,
+    parquet_rows,
+)
 
 # J6 fetch / blob-winner joins: broadcast the skinny side only below
 # this ESTIMATED byte size (measured url+host chars + fixed per-row
@@ -85,6 +92,9 @@ MAX_SHUFFLE_PARTITIONS = 4096
 # still fans out.
 MAX_TASK_WAVES = 8
 SPILL_GUARD_PARTITION_BYTES = 512 << 20
+# Bucket count of a crawl whose round-0 manifest predates the recorded
+# layout (the former fixed CrawlConfig default).
+LEGACY_N_BUCKETS = 32
 # Concurrent sink writers: the dozen per-round sink jobs are
 # individually tiny, so at 6 threads the flush ran two serial waves
 # whose second wave was latency, not throughput (the scheduler
@@ -110,12 +120,13 @@ class CrawlConfig:
     # error rows.
     fetch_robots_txt: bool = False
     bloom_prefilter: bool = True
-    # state layout, fixed when the crawl bootstraps: the round-0
-    # manifest records both and every later round (a resume under other
-    # values included) reads, probes, merges and writes state with the
+    # per-shard bloom bits. The state layout is fixed when the crawl
+    # bootstraps: the bucket count comes from state_buckets over the
+    # corpus row count and shard_bits; the round-0 manifest records
+    # both, and every later round (a resume under another shard_bits
+    # included) reads, probes, merges and writes state with the
     # manifest's values
-    n_buckets: int = 32
-    shard_bits: int = 1 << 20  # per-shard bloom bits (scale: size per bucket)
+    shard_bits: int = 1 << 20
     salt: int = 8  # hot-host salting fan-out before extraction
     media: bool = True
     # face detector plugged into media/faces.py: "none" mirrors the
@@ -136,6 +147,26 @@ class CrawlConfig:
     compact_seen_every: int = 8
     lineage_metrics: bool = True
     extra: dict = field(default_factory=dict)
+
+
+def size_partitions(raw: float, parallelism: int) -> int:
+    """A task count for ``raw`` units of work: at least one full wave of
+    the scheduler, rounded UP to whole waves (a partial last wave leaves
+    cores idle), capped at MAX_SHUFFLE_PARTITIONS. Sizes both the
+    per-round shuffle and the crawl state's bucket count."""
+    waves = max(1, math.ceil(raw / parallelism))
+    return min(MAX_SHUFFLE_PARTITIONS, waves * parallelism)
+
+
+def state_buckets(rows: int, shard_bits: int, parallelism: int) -> int:
+    """Bucket count of the crawl state (frontier, seen, drained,
+    sites_keys, bloom shards) for a corpus of ``rows`` pages: one bloom
+    shard per bucket, each holding ``shard_bits / BITS_PER_KEY`` keys at
+    the filter's design false-positive rate. A fixed count paid hundreds
+    of near-empty tasks per round on a small crawl (32 buckets gave 776
+    tasks on a 1200-page round, 8 gave 448) and stays too few at
+    10^10 urls."""
+    return size_partitions(rows * bloom_ops.BITS_PER_KEY / shard_bits, parallelism)
 
 
 def _ms(since: float) -> int:
@@ -234,6 +265,7 @@ class CrawlEngine:
         self.spark = spark
         self.cfg = cfg
         self.state = CrawlState(cfg.state_dir)
+        self.pages_path = pages_path
         self.pages = spark.read.schema(schemas.PAGES).parquet(pages_path)
         self.seeds_path = seeds_path
         self.flagged = ops.load_flagged_words(spark, flagged_path)
@@ -259,8 +291,16 @@ class CrawlEngine:
         Seeds do NOT enter the seen set (addStartSites never touches
         the bloom — crawling.go:153-175): a seed rediscovered as a
         link is re-enqueued and re-fetched once, faithfully.
+
+        The state's bucket count is sized here, once, from the corpus
+        row count in the pages table's parquet footers (no Spark job).
         """
         r = 0
+        n_buckets = state_buckets(
+            parquet_rows(self.pages_path),
+            self.cfg.shard_bits,
+            self.spark.sparkContext.defaultParallelism,
+        )
         seeds = ops.load_seeds(self.spark, self.seeds_path)
         frontier = (
             seeds.withColumn("host", host_expr("url_norm"))
@@ -279,7 +319,7 @@ class CrawlEngine:
             frontier = frontier.unionByName(
                 _robots_txt_urls(frontier).withColumn("round_added", F.lit(0))
             )
-        self.state.write_bucketed(frontier, r, "frontier_full", self.cfg.n_buckets)
+        self.state.write_bucketed(frontier, r, "frontier_full", n_buckets)
         seen0 = self.spark.createDataFrame([], schemas.SEEN)
         if self.cfg.fetch_robots_txt:
             # the bootstrap robots rows enter seen immediately (unlike
@@ -293,10 +333,10 @@ class CrawlEngine:
                     "url_norm", "url_hash", F.lit(0).alias("round_seen")
                 )
             )
-        self.state.write_bucketed(seen0, r, "seen_full", self.cfg.n_buckets)
+        self.state.write_bucketed(seen0, r, "seen_full", n_buckets)
         if self.cfg.bloom_prefilter:
             shards = bloom_ops.build_shards(
-                seeds.limit(0), self.cfg.n_buckets, self.cfg.shard_bits
+                seeds.limit(0), n_buckets, self.cfg.shard_bits
             )
             self._write(shards, r, "bloom")
         self.state.commit_round(
@@ -308,7 +348,7 @@ class CrawlEngine:
                 "sites_parts": [],
                 "bloom": f"r{r:05d}/bloom" if self.cfg.bloom_prefilter else None,
                 "pages_fetched": 0,
-                "n_buckets": self.cfg.n_buckets,
+                "n_buckets": n_buckets,
                 "shard_bits": self.cfg.shard_bits,
             },
         )
@@ -325,9 +365,10 @@ class CrawlEngine:
             for p in parts
         ]
 
-    def _read_seen(self, parts: list[str], n_buckets: int | None = None) -> DataFrame:
-        """Union view of all seen parts (membership queries/tests)."""
-        return _union(self._seen_parts(parts, n_buckets or self.cfg.n_buckets))
+    def _read_seen(self, parts: list[str], n_buckets: int) -> DataFrame:
+        """Union view of all seen parts (membership queries/tests);
+        ``n_buckets`` is the manifest's."""
+        return _union(self._seen_parts(parts, n_buckets))
 
     def _size_shuffle(self, pred_batch: int, avg_page_bytes: float) -> int | None:
         """Set spark.sql.shuffle.partitions for this round from the
@@ -346,7 +387,7 @@ class CrawlEngine:
            2-thread scheduler is unaffected — exactly the asymmetry
            that collapsed N→4N scaling to 0.391 in BENCH_r03.
         Never shrinks below the parallelism; capped by
-        MAX_SHUFFLE_PARTITIONS."""
+        MAX_SHUFFLE_PARTITIONS (size_partitions)."""
         if pred_batch <= 0:
             return None
         est = pred_batch * max(avg_page_bytes, 1.0) * SHUFFLE_ROW_EXPANSION
@@ -354,10 +395,7 @@ class CrawlEngine:
         by_target = max(1, math.ceil(est / TARGET_PARTITION_BYTES))
         by_guard = max(1, math.ceil(est / SPILL_GUARD_PARTITION_BYTES))
         raw = max(min(by_target, MAX_TASK_WAVES * base), by_guard)
-        parts = min(
-            MAX_SHUFFLE_PARTITIONS,
-            math.ceil(raw / base) * base,
-        )
+        parts = size_partitions(raw, base)
         self.spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         return parts
 
@@ -505,7 +543,7 @@ class CrawlEngine:
         rd = _Round(
             self.spark,
             r,
-            n_buckets=int(prev.get("n_buckets", self.cfg.n_buckets)),
+            n_buckets=int(prev.get("n_buckets", LEGACY_N_BUCKETS)),
             shard_bits=int(prev.get("shard_bits", self.cfg.shard_bits)),
         )
         frontier = self._frontier_view(prev, rd.n_buckets)
@@ -529,7 +567,12 @@ class CrawlEngine:
         new_frontier = self._frontier(rd, prev, frontier, batch_use, new)
         self._bloom(rd, prev, new)
         errors.append(err_robots)
-        rd.sink(_union([e for e in errors if e is not None]), "errors")
+        # The union sinks would concatenate their inputs' partitions
+        # (an 80-task stage for a few thousand rows); they are written
+        # at the round's sized shuffle count instead, which never drops
+        # below the scheduler's parallelism.
+        n_out = rd.stats["shuffle_partitions"]
+        rd.sink(_union([e for e in errors if e is not None]).coalesce(n_out), "errors")
         if self.cfg.lineage_metrics:
             lineage = self._lineage(
                 {
@@ -540,7 +583,7 @@ class CrawlEngine:
                 },
                 r,
             )
-            rd.sink(lineage, "metrics")
+            rd.sink(lineage.coalesce(n_out), "metrics")
         rd.phase_ms["pre_flush"] = _ms(rd.t0)
         self._flush(rd)
         stats = self._commit(rd, new_frontier)

@@ -10,14 +10,20 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from notjusthtml_searchengine_spark import schemas
-from notjusthtml_searchengine_spark.plans.rounds import CrawlConfig, CrawlEngine
-from notjusthtml_searchengine_spark.plans.state import CrawlState
+from notjusthtml_searchengine_spark.operators import bloom as bloom_ops
+from notjusthtml_searchengine_spark.plans.rounds import (
+    CrawlConfig,
+    CrawlEngine,
+    state_buckets,
+)
+from notjusthtml_searchengine_spark.plans.state import CrawlState, parquet_rows
 from tests.sim import Simulator
 
 MAX_ROUNDS = 12
@@ -39,6 +45,17 @@ def _read_sink(spark, state_dir, name, schema):
     return spark.read.schema(schema).parquet(
         os.path.join(str(state_dir), "rounds", "r*", name)
     )
+
+
+def _read_last_seen(spark, corpus_dir, state_dir):
+    """url_norm set of the seen parts the last manifest names, read with
+    that manifest's bucket count."""
+    state = CrawlState(str(state_dir))
+    m = state.manifest(state.latest_committed_round())["stats"]
+    seen = _mk_engine(spark, corpus_dir, state_dir)._read_seen(
+        m["seen_parts"], m["n_buckets"]
+    )
+    return {r["url_norm"] for r in seen.select("url_norm").collect()}
 
 
 def _fetched_per_round(spark, state_dir):
@@ -66,7 +83,6 @@ def run_pair(request, spark, corpus, corpus_dir, tmp_path_factory):
         bloom_prefilter=(request.param == "bloom"),
         # exercise both fat-side strategies across the two params
         cache_fat=(request.param == "bloom"),
-        n_buckets=8,
         shard_bits=1 << 16,
         compact_seen_every=3,
         face_detector="fake",
@@ -110,7 +126,9 @@ def test_seen_set_matches(spark, run_pair):
     eng, stats, sim_res, state_dir = run_pair
     last = max(s["round"] for s in stats if not s.get("done"))
     manifest = eng.state.manifest(last)
-    seen = eng._read_seen(manifest["stats"]["seen_parts"])
+    seen = eng._read_seen(
+        manifest["stats"]["seen_parts"], manifest["stats"]["n_buckets"]
+    )
     eng_seen = {r["url_norm"] for r in seen.select("url_norm").collect()}
     assert eng_seen == sim_res.seen
 
@@ -236,7 +254,9 @@ def test_state_gc_expires_superseded_only(spark, run_pair):
     # latest manifest's referenced state is readable (resume-safe)
     last = max(fetch_rounds)
     manifest = eng.state.manifest(last)
-    assert eng._read_seen(manifest["stats"]["seen_parts"]).count() >= 0
+    assert eng._read_seen(
+        manifest["stats"]["seen_parts"], manifest["stats"]["n_buckets"]
+    ).count() >= 0
     frontier = eng._frontier_view(
         manifest["stats"], manifest["stats"]["n_buckets"]
     )
@@ -273,6 +293,52 @@ def test_phase_timings_in_manifest(run_pair):
         m = eng.state.manifest(s["round"])
         assert {"pre_flush", "flush", "counters"} <= set(m["stats"]["phase_ms"])
         assert set(m["stats"]["sink_ms"]) == set(m["tables"]) - {"round_stats"}
+
+
+def test_bucket_count_sized_at_bootstrap(spark, run_pair, corpus_dir):
+    """The round-0 manifest records the bucket rule's count for this
+    corpus and session, and every later round carries it forward."""
+    eng, stats, _, _ = run_pair
+    expect = state_buckets(
+        parquet_rows(os.path.join(corpus_dir, "pages.parquet")),
+        1 << 16,
+        spark.sparkContext.defaultParallelism,
+    )
+    assert eng.state.manifest(0)["stats"]["n_buckets"] == expect
+    for s in stats:
+        if not s.get("done"):
+            assert eng.state.manifest(s["round"])["stats"]["n_buckets"] == expect
+
+
+def test_union_sinks_written_at_round_shuffle_count(
+    spark, corpus_dir, tmp_path_factory, monkeypatch
+):
+    """errors and metrics are written at the round's sized shuffle
+    partition count instead of concatenating their inputs' partitions.
+    The count is read from the frame each round queues: the unions' few
+    rows keep the file count under the bound either way."""
+    from notjusthtml_searchengine_spark.plans import rounds
+
+    frames = {}
+    sink = rounds._Round.sink
+
+    def record(rd, df, name, bucket_col=None):
+        frames[rd.r, name] = df
+        sink(rd, df, name, bucket_col)
+
+    monkeypatch.setattr(rounds._Round, "sink", record)
+    eng = _mk_engine(
+        spark, corpus_dir, tmp_path_factory.mktemp("state_union"), per_host_budget=5
+    )
+    stats = [s for s in eng.run(max_rounds=2) if not s.get("done")]
+    assert stats
+    for s in stats:
+        for name in ("errors", "metrics"):
+            n = s["shuffle_partitions"]
+            assert frames[s["round"], name].rdd.getNumPartitions() <= n, (s, name)
+            path = eng.state.table_path(s["round"], name)
+            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            assert 0 < len(files) <= n, (s["round"], name)
 
 
 def test_resume_identical_to_uninterrupted(spark, corpus, corpus_dir, tmp_path_factory):
@@ -312,39 +378,52 @@ def test_resume_identical_to_uninterrupted(spark, corpus, corpus_dir, tmp_path_f
     last_full = CrawlState(str(full_dir)).latest_committed_round()
     last_part = CrawlState(str(part_dir)).latest_committed_round()
     assert last_full == last_part
-    seen_full = {
-        r["url_norm"]
-        for r in _mk_engine(spark, corpus_dir, full_dir)._read_seen(
-            CrawlState(str(full_dir)).manifest(last_full)["stats"]["seen_parts"]
-        ).collect()
-    }
-    seen_part = {
-        r["url_norm"]
-        for r in _mk_engine(spark, corpus_dir, part_dir)._read_seen(
-            CrawlState(str(part_dir)).manifest(last_part)["stats"]["seen_parts"]
-        ).collect()
-    }
+    seen_full = _read_last_seen(spark, corpus_dir, full_dir)
+    seen_part = _read_last_seen(spark, corpus_dir, part_dir)
     assert seen_full == seen_part
 
 
-def test_resume_keeps_bootstrap_state_layout(spark, corpus, corpus_dir, tmp_path_factory):
-    """A resume under another bucket count and bloom shard size keeps
-    the layout the crawl bootstrapped with. Probing the bloom with
-    other values tests candidates against another bucket's bits; its
-    false negatives skip the exact seen check and re-fetch seen urls.
-    The simulator is the uninterrupted run (run_pair pins the engine
-    to it)."""
+def test_resume_keeps_bootstrap_state_layout(
+    spark, corpus, corpus_dir, tmp_path_factory, monkeypatch
+):
+    """A restart under another bloom shard size, whose bucket rule gives
+    another count, keeps the layout the crawl bootstrapped with. Probing
+    the bloom with other values tests candidates against another
+    bucket's bits, and reading a bucketed table under another count
+    misaligns it with the candidates' exchange; both let seen urls
+    through and re-fetch them. The simulator is the uninterrupted run
+    (run_pair pins the engine to it)."""
     state_dir = tmp_path_factory.mktemp("state_relayout")
-    eng = _mk_engine(
-        spark, corpus_dir, state_dir, per_host_budget=5, n_buckets=8, shard_bits=1 << 16
-    )
+    eng = _mk_engine(spark, corpus_dir, state_dir, per_host_budget=5, shard_bits=1 << 16)
     eng.bootstrap()
     eng.run_round(1)
     eng.run_round(2)
-    eng_resume = _mk_engine(
-        spark, corpus_dir, state_dir, per_host_budget=5, n_buckets=4, shard_bits=1 << 12
+    layout = (eng.state.manifest(0)["stats"]["n_buckets"], 1 << 16)
+    # the resume's rule input: 1 bit per key at a 1<<12-bit shard
+    monkeypatch.setattr(bloom_ops, "BITS_PER_KEY", 1 << 12)
+    rule = state_buckets(
+        parquet_rows(os.path.join(corpus_dir, "pages.parquet")),
+        1 << 12,
+        spark.sparkContext.defaultParallelism,
     )
-    eng_resume.run(max_rounds=MAX_ROUNDS)
+    assert rule != layout[0]
+    # a restart: the bucketed tables' catalog entries are gone and are
+    # re-registered from the bucket count the resume reads them with
+    prev = eng.state.manifest(2)["stats"]
+    for key in ("seen_parts", "frontier_parts", "drained_parts", "sites_parts"):
+        for rel in prev[key]:
+            spark.sql(f"DROP TABLE IF EXISTS {eng.state.bucketed_table_name(rel)}")
+    eng_resume = _mk_engine(
+        spark, corpus_dir, state_dir, per_host_budget=5, shard_bits=1 << 12
+    )
+    # at scale the seen side is never broadcast: without this the tiny
+    # test tables would be, and a misread bucket count would not show
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        stats = eng_resume.run(max_rounds=MAX_ROUNDS)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
     sim_res = Simulator(corpus, per_host_budget=5, round_budget=None, use_robots=True).run(
         max_rounds=MAX_ROUNDS
     )
@@ -355,9 +434,22 @@ def test_resume_keeps_bootstrap_state_layout(spark, corpus, corpus_dir, tmp_path
     assert len(contents) == len(sim_res.contents)
     assert set(contents) == sim_res.contents
     m = eng_resume.state.manifest(eng_resume.state.latest_committed_round())["stats"]
-    assert (m["n_buckets"], m["shard_bits"]) == (8, 1 << 16)
-    seen = eng_resume._read_seen(m["seen_parts"], m["n_buckets"])
-    assert {r["url_norm"] for r in seen.select("url_norm").collect()} == sim_res.seen
+    assert (m["n_buckets"], m["shard_bits"]) == layout
+    assert _read_last_seen(spark, corpus_dir, state_dir) == sim_res.seen
+    # every bucketed state file the resumed rounds wrote is one of the
+    # bootstrap's buckets (Spark's bucket file name: ..._<id>.c000...)
+    for s in stats:
+        if s.get("done"):
+            continue
+        rd = eng_resume.state.round_dir(s["round"])
+        for tbl in ("seen_delta", "seen_full", "frontier_delta", "frontier_full",
+                    "drained", "sites_keys"):
+            if not os.path.isdir(os.path.join(rd, tbl)):
+                continue
+            for f in os.listdir(os.path.join(rd, tbl)):
+                if f.endswith(".parquet"):
+                    bucket = int(re.match(r".*_(\d+)(?:\..*)?$", f).group(1))
+                    assert bucket < layout[0], (s["round"], tbl, f)
 
 
 def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
@@ -371,7 +463,7 @@ def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
     state_dir = tmp_path_factory.mktemp("state_incr")
     eng = _mk_engine(
         spark, corpus_dir, state_dir,
-        per_host_budget=5, bloom_prefilter=False, n_buckets=8,
+        per_host_budget=5, bloom_prefilter=False,
         compact_seen_every=100,  # never compacts in this run
         media=False,
     )
@@ -395,7 +487,7 @@ def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
     # is a seed rediscovered as a link — the faithful re-enqueue quirk)
     last = max(s["round"] for s in fetch)
     m = eng.state.manifest(last)
-    view = eng._frontier_view(m["stats"], 8)
+    view = eng._frontier_view(m["stats"], m["stats"]["n_buckets"])
     with open(os.path.join(corpus_dir, "seeds.txt")) as f:
         seed_urls = [line.strip() for line in f if line.strip()]
     fetched_urls = _read_sink(spark, state_dir, "contents", schemas.CONTENTS)

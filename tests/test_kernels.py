@@ -86,6 +86,48 @@ def test_keyword_emitted_for_raw_nonempty_even_if_cleans_empty():
     assert links[0]["keywords"] == [{"visibility": 1, "text": ""}]
 
 
+def test_quirks_in_multi_child_links():
+    """The two quirks above on links with several children, which take
+    the generic walk rather than extract_keywords' fast path."""
+    html = b'<html><body><a href="/x">h1<b>bold</b></a><a href="/y">\n<i>h3</i></a></body></html>'
+    links = extract_links("http://o.example/", html)
+    assert links[0]["keywords"] == [
+        {"visibility": 10, "text": "h1"},
+        {"visibility": 1, "text": "bold"},
+    ]
+    assert links[1]["keywords"] == [
+        {"visibility": 1, "text": ""},
+        {"visibility": 8, "text": "h3"},
+    ]
+
+
+def test_extract_keywords_fast_path_equals_generic_walk():
+    """extract_keywords' fast path (no children, or one text child) gives
+    what the generic walk gives, on those shapes and on multi-child
+    ones, under an inherited multiplier too."""
+    from notjusthtml_searchengine_spark.extract.html_tree import parse_page
+    from notjusthtml_searchengine_spark.extract.kernels import _walk_keywords
+
+    bodies = [
+        "", "plain", "h1", "h7", "h8", "\n", "  two  words ", "fish &amp; chips",
+        "<b>bold</b>", "<h2>head</h2>", "<h2>h1</h2>", "h1<b>bold</b>",
+        "<b>x</b>h2", "\n<i>h3</i>", "a<h4>b<b>h1</b>c</h4>d", "<br>h5",
+    ]
+    shapes = {0: 0, 1: 0, "multi": 0}
+    for tag in ("a", "h1", "h3"):
+        for body in bodies:
+            html = f'<html><body><{tag} href="/x">{body}</{tag}></body></html>'
+            node = parse_page(html.encode())[1][0]
+            n = len(node.children)
+            shapes[n if n < 2 else "multi"] += 1
+            for mult in (1, 6):
+                assert extract_keywords(node, mult) == _walk_keywords(node, mult), (
+                    html,
+                    mult,
+                )
+    assert all(shapes.values()), shapes
+
+
 def test_src_links_extracted_from_img_and_script():
     html = (
         b'<html><body><img src="http://a.example/i.png"/>'

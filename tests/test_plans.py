@@ -476,3 +476,33 @@ def test_data_proportional_shuffle_sizing(spark, monkeypatch):
         assert eng._size_shuffle(10_000_000_000, 7000.0) == 64
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_partition_sizing_helper_and_bucket_rule(monkeypatch):
+    """One helper sizes the round shuffle and the state's bucket count:
+    a floor of one scheduler wave, whole waves, MAX_SHUFFLE_PARTITIONS
+    as the cap. The bucket rule feeds it ceil(rows / keys per shard),
+    keys per shard being shard_bits / BITS_PER_KEY."""
+    from notjusthtml_searchengine_spark.plans import rounds
+
+    size, buckets = rounds.size_partitions, rounds.state_buckets
+    # the parallelism floor
+    assert size(0, 8) == size(1, 8) == size(8, 8) == 8
+    # rounded up to a multiple of the parallelism
+    assert size(9, 8) == 16
+    assert size(12.5, 4) == 16
+    assert size(13, 6) == 18
+    # the cap, read from the module constant
+    assert size(10**9, 8) == rounds.MAX_SHUFFLE_PARTITIONS == 4096
+    monkeypatch.setattr(rounds, "MAX_SHUFFLE_PARTITIONS", 64)
+    assert size(100, 8) == 64
+    monkeypatch.undo()
+    # 1<<20-bit shards hold 104,857.6 keys each
+    assert buckets(0, 1 << 20, 8) == 8
+    assert buckets(1200, 1 << 20, 8) == 8  # the 1200-page bench corpus
+    assert buckets(838_860, 1 << 20, 8) == 8  # 7.99999 shards
+    assert buckets(838_861, 1 << 20, 8) == 16  # 8.00001 shards
+    assert buckets(838_861, 1 << 20, 3) == 9
+    # design scale: 10^10 urls need 95,368 shards; the cap holds
+    assert buckets(10**10, 1 << 20, 8) == rounds.MAX_SHUFFLE_PARTITIONS
+    assert buckets(10**10, 1 << 20, 48) == rounds.MAX_SHUFFLE_PARTITIONS

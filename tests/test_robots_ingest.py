@@ -55,7 +55,6 @@ def test_robots_fetched_in_loop_blocks_candidates(spark, tmp_path):
     d = _corpus(tmp_path)
     cfg = CrawlConfig(
         state_dir=str(tmp_path / "state"),
-        n_buckets=4,
         bloom_prefilter=False,
         media=False,
         fetch_robots_txt=True,
@@ -97,12 +96,8 @@ def test_robots_fetched_in_loop_blocks_candidates(spark, tmp_path):
 
     # blocked url is absent from seen too (blocked candidates may
     # become fetchable later if rules change)
-    seen = eng._read_seen(
-        eng.state.manifest(max(s["round"] for s in stats if not s.get("done")))[
-            "stats"
-        ]["seen_parts"],
-        4,
-    )
+    m = eng.state.manifest(max(s["round"] for s in stats if not s.get("done")))
+    seen = eng._read_seen(m["stats"]["seen_parts"], m["stats"]["n_buckets"])
     assert (
         seen.filter(F.col("url_norm") == f"{B}/blocked/x").count() == 0
     )
@@ -140,7 +135,6 @@ def test_robots_first_holdback_and_drain_backstop(spark, tmp_path):
 
     cfg = CrawlConfig(
         state_dir=str(tmp_path / "state"),
-        n_buckets=4,
         bloom_prefilter=False,
         media=False,
         fetch_robots_txt=True,

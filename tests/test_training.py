@@ -20,8 +20,7 @@ from notjusthtml_searchengine_spark.plans.training import (
 def crawled_state(spark, corpus_dir, tmp_path_factory):
     state_dir = str(tmp_path_factory.mktemp("train_state"))
     cfg = CrawlConfig(
-        state_dir=state_dir, per_host_budget=5, n_buckets=8,
-        shard_bits=1 << 16,
+        state_dir=state_dir, per_host_budget=5, shard_bits=1 << 16,
     )
     eng = CrawlEngine(
         spark,
