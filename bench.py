@@ -190,16 +190,7 @@ def run_crawl(
         bloom_prefilter=os.environ.get("SPARK_GRAFT_BENCH_BLOOM", "0") == "1",
         shard_bits=1 << 20,
         media=False,  # text corpus; media branch exercised in tests
-        lineage_metrics=False,
         compact_seen_every=4,
-        # the bench corpus is 48 host-randomized files (≥ cores) and no
-        # politeness clustering applies — the salted repartition would
-        # be a full shuffle of the html bodies for nothing
-        salt=0,
-        # recompute fat branches from the compressed scan: decompression
-        # is CPU (scales with cores); cache traffic is memory bandwidth
-        # (does not)
-        cache_fat=os.environ.get("SPARK_GRAFT_BENCH_CACHE_FAT", "0") == "1",
     )
     eng = CrawlEngine(
         spark,

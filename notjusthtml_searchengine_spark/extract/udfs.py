@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -34,6 +33,46 @@ def extract_links_udf(url: pd.Series, html: pd.Series) -> pd.Series:
             for u, h in zip(url, html)
         ]
     )
+
+
+class _LinkRows:
+    """The flat U1 link/keyword columns of one batch, emitted page by
+    page: one row per (link, keyword), and one row with null
+    kw_idx/visibility/text for a link with no keywords. ``idx`` holds
+    each row's input row, for the take of the carried columns."""
+
+    COLUMNS = ("pos", "dest_url", "kw_idx", "visibility", "text")
+
+    def __init__(self):
+        self.idx: list[int] = []
+        self.pos: list[int] = []
+        self.dest_url: list[str] = []
+        self.kw_idx: list[int | None] = []
+        self.visibility: list[int | None] = []
+        self.text: list[str | None] = []
+
+    def emit(self, i: int, url: str, html: bytes) -> None:
+        """Append the rows of input row ``i``'s page."""
+        idx, poss, dests = self.idx, self.pos, self.dest_url
+        kwis, viss, texts = self.kw_idx, self.visibility, self.text
+        for pos, lnk in enumerate(extract_links(url, html)):
+            dest = lnk["dest_url"]
+            kws = lnk["keywords"] or [None]
+            for ki, kw in enumerate(kws):
+                idx.append(i)
+                poss.append(pos)
+                dests.append(dest)
+                if kw is None:
+                    kwis.append(None)
+                    viss.append(None)
+                    texts.append(None)
+                else:
+                    kwis.append(ki)
+                    viss.append(kw["visibility"])
+                    texts.append(kw["text"])
+
+    def columns(self) -> dict:
+        return {n: getattr(self, n) for n in self.COLUMNS}
 
 
 def extract_links_flat(
@@ -80,38 +119,16 @@ def extract_links_flat(
         for pdf in batches:
             urls = pdf[url_col].tolist()
             htmls = pdf[html_col].tolist()
-            idx: list[int] = []
-            poss: list[int] = []
-            dests: list[str] = []
-            kwis: list[int | None] = []
-            viss: list[int | None] = []
-            texts: list[str | None] = []
+            links = _LinkRows()
             for i, (u, h) in enumerate(zip(urls, htmls)):
                 if h is None or u is None:
                     continue
                 if sniff_gate and not detect_content_type(h).startswith("text/html"):
                     continue
-                for pos, lnk in enumerate(extract_links(u, h)):
-                    dest = lnk["dest_url"]
-                    kws = lnk["keywords"] or [None]
-                    for ki, kw in enumerate(kws):
-                        idx.append(i)
-                        poss.append(pos)
-                        dests.append(dest)
-                        if kw is None:
-                            kwis.append(None)
-                            viss.append(None)
-                            texts.append(None)
-                        else:
-                            kwis.append(ki)
-                            viss.append(kw["visibility"])
-                            texts.append(kw["text"])
-            take = np.asarray(idx, dtype=np.intp)
+                links.emit(i, u, h)
+            take = np.asarray(links.idx, dtype=np.intp)
             cols = {n: pdf[n].to_numpy()[take] for n in carry_names}
-            cols.update(
-                pos=poss, dest_url=dests, kw_idx=kwis,
-                visibility=viss, text=texts,
-            )
+            cols.update(links.columns())
             yield pd.DataFrame(cols, columns=out_names)
 
     return df.mapInPandas(gen, out_schema)
@@ -157,7 +174,6 @@ def extract_with_meta(df, url_col: str = "url_norm", html_col: str = "html",
     carry_names = [f.name for f in carry]
     out_names = [f.name for f in out_schema.fields]
     meta_cols = ("content_type", "sha1", "sha512", "size")
-    link_cols = ("pos", "dest_url", "kw_idx", "visibility", "text")
 
     # Take-based emission (r6, same construction as extract_links_flat
     # above): the kind=0 meta rows and kind=1 link rows are built as
@@ -178,12 +194,7 @@ def extract_with_meta(df, url_col: str = "url_norm", html_col: str = "html",
             m_sha1: list[bytes] = []
             m_sha512: list[bytes] = []
             m_size: list[int] = []
-            l_idx: list[int] = []
-            l_pos: list[int] = []
-            l_dest: list[str] = []
-            l_kwi: list[int | None] = []
-            l_vis: list[int | None] = []
-            l_text: list[str | None] = []
+            links = _LinkRows()
 
             for i, (u, h) in enumerate(zip(urls, htmls)):
                 if h is None or u is None:
@@ -200,21 +211,7 @@ def extract_with_meta(df, url_col: str = "url_norm", html_col: str = "html",
                     or not ct.startswith("text/html")
                 ):
                     continue
-                for pos, lnk in enumerate(extract_links(u, h)):
-                    dest = lnk["dest_url"]
-                    kws = lnk["keywords"] or [None]
-                    for ki, kw in enumerate(kws):
-                        l_idx.append(i)
-                        l_pos.append(pos)
-                        l_dest.append(dest)
-                        if kw is None:
-                            l_kwi.append(None)
-                            l_vis.append(None)
-                            l_text.append(None)
-                        else:
-                            l_kwi.append(ki)
-                            l_vis.append(kw["visibility"])
-                            l_text.append(kw["text"])
+                links.emit(i, u, h)
 
             carry_np = {n: pdf[n].to_numpy() for n in carry_names}
             if m_idx:
@@ -224,17 +221,14 @@ def extract_with_meta(df, url_col: str = "url_norm", html_col: str = "html",
                     kind=0, content_type=m_ct, sha1=m_sha1,
                     sha512=m_sha512, size=m_size,
                 )
-                cols.update({n: None for n in link_cols})
+                cols.update({n: None for n in _LinkRows.COLUMNS})
                 yield pd.DataFrame(cols, columns=out_names)
-            if l_idx:
-                take = np.asarray(l_idx, dtype=np.intp)
+            if links.idx:
+                take = np.asarray(links.idx, dtype=np.intp)
                 cols = {n: carry_np[n][take] for n in carry_names}
                 cols["kind"] = 1
                 cols.update({n: None for n in meta_cols})
-                cols.update(
-                    pos=l_pos, dest_url=l_dest, kw_idx=l_kwi,
-                    visibility=l_vis, text=l_text,
-                )
+                cols.update(links.columns())
                 yield pd.DataFrame(cols, columns=out_names)
 
     return df.mapInPandas(gen, out_schema)
@@ -262,8 +256,3 @@ def canonicalize_udf(url: pd.Series) -> pd.Series:
 def host_udf(url: pd.Series) -> pd.Series:
     """Go url.Hostname() (port stripped)."""
     return host_series(url)
-
-
-def with_url_identity(df, url_col: str = "url_norm"):
-    """Standard derived columns: url_hash (engine-wide surrogate id)."""
-    return df.withColumn("url_hash", F.xxhash64(F.col(url_col)))

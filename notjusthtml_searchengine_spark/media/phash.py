@@ -101,3 +101,16 @@ def perceptual_hashes(body: bytes, content_type: str) -> tuple[int, int, int]:
         difference_hash(to_gray(img)),
         perception_hash(to_gray(img)),
     )
+
+
+def hash_columns(hashes: list) -> dict:
+    """(ahash, dhash, phash) triples, ``(None, None, None)`` for a body
+    that did not decode, as nullable ``Int64`` pandas columns: an int64
+    column holding a null becomes float64 and loses the low bits of the
+    64-bit hashes."""
+    import pandas as pd
+
+    return {
+        name: pd.array([h[i] for h in hashes], dtype="Int64")
+        for i, name in enumerate(("ahash", "dhash", "phash"))
+    }

@@ -11,7 +11,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .exif import extract_exif
-from .phash import perceptual_hashes
+from .phash import hash_columns, perceptual_hashes
 
 PHASH_RESULT = T.StructType(
     [
@@ -35,14 +35,15 @@ EXIF_RESULT = T.StructType(
 
 @pandas_udf(PHASH_RESULT)
 def phash_udf(html: pd.Series, content_type: pd.Series) -> pd.DataFrame:
-    rows = []
+    hashes, errors = [], []
     for body, ct in zip(html, content_type):
         try:
-            a, d, p = perceptual_hashes(bytes(body), ct)
-            rows.append({"ahash": a, "dhash": d, "phash": p, "error": None})
+            hashes.append(perceptual_hashes(bytes(body), ct))
+            errors.append(None)
         except Exception as e:  # decode failures → error row (E2)
-            rows.append({"ahash": None, "dhash": None, "phash": None, "error": str(e)})
-    return pd.DataFrame(rows)
+            hashes.append((None, None, None))
+            errors.append(str(e))
+    return pd.DataFrame({**hash_columns(hashes), "error": errors})
 
 
 @pandas_udf(EXIF_RESULT)

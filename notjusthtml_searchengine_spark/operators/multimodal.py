@@ -30,7 +30,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.sniff import detect_content_type
-from ..media.phash import average_hash, difference_hash, perception_hash, resize_area, to_gray
+from ..media.phash import (
+    average_hash,
+    difference_hash,
+    hash_columns,
+    perception_hash,
+    resize_area,
+    to_gray,
+)
 from ..media.png import PngError, decode_png
 
 MEDIA_META = T.StructType(
@@ -109,33 +116,25 @@ def image_features(df: DataFrame, id_col: str, body_col: str = "payload") -> Dat
 
     def gen(batches):
         for pdf in batches:
-            rows = []
-            for i, body in zip(pdf[id_col], pdf[body_col]):
+            hashes, lumas, errors = [], [], []
+            for body in pdf[body_col]:
                 try:
-                    img = _decode(bytes(body))
-                    g = to_gray(img)
-                    rows.append(
-                        {
-                            id_col: i,
-                            "ahash": average_hash(g),
-                            "dhash": difference_hash(g),
-                            "phash": perception_hash(g),
-                            "mean_luma": float(g.mean()),
-                            "error": None,
-                        }
-                    )
+                    g = to_gray(_decode(bytes(body)))
+                    hashes.append((average_hash(g), difference_hash(g), perception_hash(g)))
+                    lumas.append(float(g.mean()))
+                    errors.append(None)
                 except Exception as e:
-                    rows.append(
-                        {
-                            id_col: i,
-                            "ahash": None,
-                            "dhash": None,
-                            "phash": None,
-                            "mean_luma": None,
-                            "error": str(e),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[id_col, *IMAGE_FEATURES.names])
+                    hashes.append((None, None, None))
+                    lumas.append(None)
+                    errors.append(str(e))
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    **hash_columns(hashes),
+                    "mean_luma": lumas,
+                    "error": errors,
+                }
+            )
 
     return df.select(id_col, body_col).mapInPandas(gen, out_schema)
 

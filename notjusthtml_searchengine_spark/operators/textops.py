@@ -105,13 +105,6 @@ def stopword_ratio(col: Column, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def mean_token_len(col: Column) -> Column:
-    toks = tokens(col)
-    return F.aggregate(
-        toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-    ) / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(col: Column) -> Column:
     """Composite [0,1]-ish quality heuristic: length band, punctuation
     sanity, stopword presence. Deterministic, oracle-expressible."""

@@ -53,6 +53,7 @@ from .state import (
     SEEN_DDL,
     SITES_KEYS_DDL,
     CrawlState,
+    parquet_row_groups,
     parquet_rows,
 )
 
@@ -104,6 +105,13 @@ WRITE_THREADS = 12
 
 @dataclass
 class CrawlConfig:
+    """Settings of a crawl. What the fat rows of a round get is not a
+    setting: each round spreads them over the cores by the rule of
+    ``spread_fat_rows`` and caches them by the rule of
+    ``cache_fat_rows``, and records both decisions with their inputs in
+    its manifest (``fat_rows``). Per-partition lineage (the ``metrics``
+    sink) is written every round."""
+
     state_dir: str
     round_budget: int | None = None
     per_host_budget: int | None = 64
@@ -127,25 +135,15 @@ class CrawlConfig:
     # included) reads, probes, merges and writes state with the
     # manifest's values
     shard_bits: int = 1 << 20
-    salt: int = 8  # hot-host salting fan-out before extraction
     media: bool = True
     # face detector plugged into media/faces.py: "none" mirrors the
     # reference run without model files (no Face rows); "fake" is the
     # deterministic stub; a real model slots in by name.
     face_detector: str = "none"
-    # Cache the fat (html) fetch result between branches. True trades
-    # memory bandwidth (serialize once + deserialize per consumer) for
-    # fewer scans; False re-derives each fat branch from the compressed
-    # parquet scan + broadcast fetch join — decompression is CPU, which
-    # SCALES with cores, while cache traffic does not. Benchmarks on
-    # this class of corpus run ~equal wall at high core counts with
-    # strictly better scaling efficiency when False.
-    cache_fat: bool = True
     # seen/sites_keys compaction and frontier full-rewrite cadence;
     # superseded frontier/seen/bloom state is expired after each
     # compaction (sinks untouched; see CrawlState.gc_state)
     compact_seen_every: int = 8
-    lineage_metrics: bool = True
     extra: dict = field(default_factory=dict)
 
 
@@ -167,6 +165,41 @@ def state_buckets(rows: int, shard_bits: int, parallelism: int) -> int:
     tasks on a 1200-page round, 8 gave 448) and stays too few at
     10^10 urls."""
     return size_partitions(rows * bloom_ops.BITS_PER_KEY / shard_bits, parallelism)
+
+
+def spread_fat_rows(
+    broadcast_fetch: bool, scan_partitions: int, row_groups: int, parallelism: int
+) -> bool:
+    """Whether a round hash-spreads its fetched fat rows over the cores
+    before the extraction UDF. A broadcast fetch join runs inside the
+    pages scan's tasks, and a scan task that holds no parquet row group
+    reads nothing, so the fetch gives min(scan partitions, row groups)
+    non-empty tasks; fewer than the scheduler's parallelism leaves cores
+    idle through the round's most expensive stage, which a shuffle of
+    the bodies restores (one 2-row-group file on 4 cores). A row-group
+    count of 0 means no footers were read (a pages path that is not
+    local), and the scan partitions decide alone. A shuffle-hash fetch
+    is already spread by its join's exchange."""
+    tasks = min(scan_partitions, row_groups) if row_groups else scan_partitions
+    return broadcast_fetch and tasks < parallelism
+
+
+def cache_fat_rows(shuffled: bool, est_bytes: float, storage_bytes: int) -> bool:
+    """Whether a round caches its gated fat rows, which the extraction
+    pass, the blob join and the media gate each read, instead of
+    re-deriving them per consumer. Rows that come straight off the
+    pages scan behind a broadcast fetch are re-derived: decompression
+    and the join probe scale with cores, cache traffic is memory
+    bandwidth, which does not (on the 96k-page bench drain re-deriving
+    took 4,635 -> 7,972 pages/s at 16 threads, and at 4 cores it beat
+    caching in 3 of 4 interleaved pairs).
+    Rows that come out of a shuffle of the bodies (the spread, or a
+    shuffle-hash fetch) would repeat that shuffle per consumer, so they
+    are cached when the round's estimated fat bytes fit in half of
+    storage memory (the other half is left to the round's other caches
+    and to execution). At 10^10-url design scale a round's fat rows
+    never fit, and they are re-derived."""
+    return shuffled and 2 * est_bytes <= storage_bytes
 
 
 def _ms(since: float) -> int:
@@ -283,6 +316,33 @@ class CrawlEngine:
         )
         # memoized static robots view (see _robots_view)
         self._static_rules: DataFrame | None = None
+
+    # The fat-row rules' engine-wide inputs are read once, at the first
+    # round that needs them, so engine set-up does no work for them.
+    @functools.cached_property
+    def _pages_scan(self) -> dict:
+        """The pages scan's partition count and its row-group count from
+        the parquet footers (no Spark job; a pages path that is not
+        local counts 0 row groups)."""
+        return {
+            "scan_partitions": self.pages.rdd.getNumPartitions(),
+            "row_groups": parquet_row_groups(self.pages_path),
+        }
+
+    @functools.cached_property
+    def _storage_bytes(self) -> int:
+        """Storage memory the fat-row cache can use, as the block
+        managers measured it from their JVMs' heaps: the executors'
+        total, or the driver's under a local master (whose executor
+        runs in the driver JVM)."""
+        jsc = self.spark.sparkContext._jsc.sc()
+        driver = jsc.env().blockManager().blockManagerId().hostPort()
+        max_mem, it = {}, jsc.getExecutorMemoryStatus().iterator()
+        while it.hasNext():  # host:port -> (max memory, remaining)
+            entry = it.next()
+            max_mem[entry._1()] = entry._2()._1()
+        executors = [m for k, m in max_mem.items() if k != driver]
+        return sum(executors) if executors else max_mem[driver]
 
     # ------------------------------------------------------------------
     def bootstrap(self) -> None:
@@ -554,7 +614,7 @@ class CrawlEngine:
         batch, rules, broadcast_batch = drained
         batch_use, batch_fetch, err_robots = self._hold_back(rd, batch, rules)
         gated, combined, meta, errors = self._fetch_extract(
-            rd, batch_fetch, broadcast_batch
+            rd, prev, batch_fetch, broadcast_batch
         )
         ok = meta.filter(F.col("gate") == "ok")
         self._content_sinks(rd, prev, ok)
@@ -573,17 +633,16 @@ class CrawlEngine:
         # below the scheduler's parallelism.
         n_out = rd.stats["shuffle_partitions"]
         rd.sink(_union([e for e in errors if e is not None]).coalesce(n_out), "errors")
-        if self.cfg.lineage_metrics:
-            lineage = self._lineage(
-                {
-                    "batch": (batch, F.length("url_norm")),
-                    "fetched_ok": (ok, F.col("size")),
-                    "links": (rated, F.length("dest_url")),
-                    "new_seen": (new, F.length("url_norm")),
-                },
-                r,
-            )
-            rd.sink(lineage.coalesce(n_out), "metrics")
+        lineage = self._lineage(
+            {
+                "batch": (batch, F.length("url_norm")),
+                "fetched_ok": (ok, F.col("size")),
+                "links": (rated, F.length("dest_url")),
+                "new_seen": (new, F.length("url_norm")),
+            },
+            r,
+        )
+        rd.sink(lineage.coalesce(n_out), "metrics")
         rd.phase_ms["pre_flush"] = _ms(rd.t0)
         self._flush(rd)
         stats = self._commit(rd, new_frontier)
@@ -693,11 +752,12 @@ class CrawlEngine:
         batch_fetch = batch_use.filter(~F.col("robots_blocked")).drop("robots_blocked")
         return batch_use, batch_fetch, err_robots
 
-    def _fetch_extract(self, rd: _Round, batch_fetch: DataFrame, broadcast_batch: bool):
+    def _fetch_extract(
+        self, rd: _Round, prev: dict, batch_fetch: DataFrame, broadcast_batch: bool
+    ):
         """J6 fetch + gates, then ONE fused extract+meta pass. Returns
         (the gated fat rows, the extraction output, the per-page meta
         cache, the gate and miss error rows)."""
-        cfg = self.cfg
         # column-prune before the join: text/lang are never used in
         # the round (text regeneration is a test-side invariant).
         # Inner-join + broadcast batch: the corpus is never shuffled;
@@ -708,24 +768,32 @@ class CrawlEngine:
             broadcast_batch=broadcast_batch,
         )
         gated = ops.gate_fetched(fetched)
-        # Salted redistribution before the fat UDFs spreads hot hosts
-        # (skew, §4.2) and restores parallelism when the corpus scan
-        # has fewer partitions than cores. It is a full shuffle of the
-        # html bodies — skip it (salt=0) when the corpus layout already
-        # provides ≥cores partitions and no politeness clustering
-        # applies (the host-randomized scan is skew-free by itself).
-        if cfg.salt > 0:
-            gated = gated.repartition(
-                self.spark.sparkContext.defaultParallelism,
-                F.xxhash64("host"),
-                F.pmod(F.col("url_hash"), F.lit(cfg.salt)),
-            )
         # Fat side (html) — consumed at most 3× (r6): the fused
         # extract+meta kernel pass, the blob-content join, and the
-        # media magic-byte gate. Either cached (serialized) or
-        # re-derived per consumer from the compressed scan + broadcast
-        # join, per cfg.cache_fat.
-        if cfg.cache_fat:
+        # media magic-byte gate. Spread over the cores when the scan
+        # gives too few tasks (hashing on url_hash alone spreads hot
+        # hosts too: skew, §4.2), then either cached (serialized) or
+        # re-derived per consumer from the compressed scan + fetch join
+        # (see cache_fat_rows).
+        parallelism = self.spark.sparkContext.defaultParallelism
+        scan = self._pages_scan
+        spread = spread_fat_rows(
+            broadcast_batch, scan["scan_partitions"], scan["row_groups"], parallelism
+        )
+        est_bytes = rd.stats["batch"] * float(prev.get("avg_page_bytes", EST_PAGE_BYTES))
+        cached = cache_fat_rows(spread or not broadcast_batch, est_bytes, self._storage_bytes)
+        rd.stats["fat_rows"] = {
+            "spread": spread,
+            "broadcast_fetch": broadcast_batch,
+            **scan,
+            "parallelism": parallelism,
+            "cached": cached,
+            "est_bytes": int(est_bytes),
+            "storage_bytes": self._storage_bytes,
+        }
+        if spread:
+            gated = gated.repartition(parallelism, "url_hash")
+        if cached:
             gated = rd.cache(gated)
         # ONE fat pass for extraction AND the per-page meta columns
         # (r6): sniff/sha1/sha512/size ride the same scan that feeds

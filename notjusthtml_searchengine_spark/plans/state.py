@@ -36,11 +36,10 @@ DRAINED_DDL = "url_hash BIGINT, drained_round INT"
 SITES_KEYS_DDL = "site_id BIGINT"
 
 
-def parquet_rows(path: str) -> int:
-    """Row count of a local parquet file or directory tree from the
-    FOOTERS alone — no scan, no Spark job. Hidden (``.``/``_``) files
-    are skipped as Spark skips them; a path that is not local counts 0
-    rows."""
+def _parquet_footers(path: str) -> list:
+    """Footer metadata of a local parquet file or of every parquet file
+    under a directory tree. Hidden (``.``/``_``) files are skipped as
+    Spark skips them; a path that is not local has none."""
     import pyarrow.parquet as pq
 
     if os.path.isfile(path):
@@ -52,7 +51,20 @@ def parquet_rows(path: str) -> int:
             for f in names
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         ]
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    return [pq.ParquetFile(f).metadata for f in files]
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a local parquet file or directory tree from the
+    FOOTERS alone — no scan, no Spark job (0 for a path that is not
+    local)."""
+    return sum(m.num_rows for m in _parquet_footers(path))
+
+
+def parquet_row_groups(path: str) -> int:
+    """Row-group count of a local parquet file or directory tree, from
+    the footers (0 for a path that is not local)."""
+    return sum(m.num_row_groups for m in _parquet_footers(path))
 
 
 class CrawlState:

@@ -73,24 +73,52 @@ def _fetched_per_round(spark, state_dir):
 
 @pytest.fixture(scope="module", params=["bloom", "exact"])
 def run_pair(request, spark, corpus, corpus_dir, tmp_path_factory):
+    """The "bloom" crawl runs the shipped configuration on the small test
+    corpus: its fat rows are spread and cached, and the small seen
+    tables are broadcast. The "exact" crawl is the scale side of every
+    rule: broadcast joins are off (the seen check anti-joins the bucketed
+    seen parts), the fat-cache budget is 0 (the fat rows are re-derived
+    from the scan) and the pages scan gives enough tasks (no spread)."""
     state_dir = tmp_path_factory.mktemp(f"state_{request.param}")
+    exact = request.param == "exact"
     eng = _mk_engine(
         spark,
         corpus_dir,
         state_dir,
         per_host_budget=5,
         round_budget=None,
-        bloom_prefilter=(request.param == "bloom"),
-        # exercise both fat-side strategies across the two params
-        cache_fat=(request.param == "bloom"),
+        bloom_prefilter=not exact,
         shard_bits=1 << 16,
         compact_seen_every=3,
         face_detector="fake",
     )
-    stats = eng.run(max_rounds=MAX_ROUNDS)
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if exact:
+        parallelism = spark.sparkContext.defaultParallelism
+        eng._pages_scan = {"scan_partitions": parallelism, "row_groups": parallelism}
+        eng._storage_bytes = 0
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        stats = eng.run(max_rounds=MAX_ROUNDS)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
     sim = Simulator(corpus, per_host_budget=5, round_budget=None, use_robots=True)
     sim_res = sim.run(max_rounds=MAX_ROUNDS)
     return eng, stats, sim_res, state_dir
+
+
+def test_fat_row_rules_recorded(run_pair):
+    """Every fetch round's manifest records both fat-row decisions with
+    their inputs: the shipped run spreads and caches the small corpus's
+    fat rows, the scale-side run does neither."""
+    eng, stats, _, _ = run_pair
+    exact = not eng.cfg.bloom_prefilter
+    for s in stats:
+        if s.get("done"):
+            continue
+        fat = eng.state.manifest(s["round"])["stats"]["fat_rows"]
+        assert (fat["spread"], fat["cached"]) == (not exact, not exact), fat
+        assert fat["broadcast_fetch"] and fat["est_bytes"] > 0, fat
 
 
 def test_rounds_terminate(run_pair):

@@ -101,3 +101,20 @@ def test_exif_full_and_partial_and_none():
     assert extract_exif(encode_jpeg_with_exif(None, None, None, None)) is None
     assert extract_exif(b"\xff\xd8no exif here") is None
     assert extract_exif(b"not a jpeg") is None
+
+
+def test_phash_udf_keeps_64_bits_beside_error_rows(spark):
+    """A batch holding an undecodable image next to a good one returns
+    the good one's hashes exactly; a null in a plain int64 pandas column
+    turned it into float64 and rounded the hashes' low bits."""
+    from notjusthtml_searchengine_spark.media.udfs import phash_udf
+
+    body = encode_jpeg_with_exif("Cam", None, None, None, seed=3)
+    df = spark.createDataFrame(
+        [(b"\xff\xd8\xffjunk", "image/jpeg"), (body, "image/jpeg")],
+        "html binary, content_type string",
+    ).coalesce(1)
+    rows = df.select(phash_udf("html", "content_type").alias("ph")).collect()
+    assert rows[0]["ph"]["error"] and rows[0]["ph"]["phash"] is None
+    assert tuple(rows[1]["ph"][:3]) == perceptual_hashes(body, "image/jpeg")
+    assert rows[1]["ph"]["error"] is None

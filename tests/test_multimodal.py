@@ -44,6 +44,19 @@ def test_image_features_and_error_split(media_df):
     assert all(r["phash"] is not None and r["mean_luma"] > 0 for r in ok)
 
 
+def test_image_features_keep_64_bits_beside_error_rows(media_df):
+    """One batch of good and undecodable images returns the good ones'
+    hashes exactly as a batch of good images alone does; a null in an
+    int64 pandas column turned it into float64 and rounded the hashes'
+    low bits."""
+    cols = ["content_id", "ahash", "dhash", "phash"]
+    mixed = image_features(media_df.coalesce(1), "content_id").select(cols).collect()
+    good = media_df.filter("content_id < 100").coalesce(1)
+    alone = image_features(good, "content_id").select(cols).collect()
+    assert {r for r in mixed if r["content_id"] < 100} == set(alone)
+    assert {r["content_id"] for r in mixed if r["phash"] is None} == {100, 101}
+
+
 def test_resize_images(media_df):
     out = {r["content_id"]: r for r in resize_images(media_df, "content_id", out_w=8, out_h=8).collect()}
     assert len(bytes(out[0]["resized"])) == 64

@@ -506,3 +506,71 @@ def test_partition_sizing_helper_and_bucket_rule(monkeypatch):
     # design scale: 10^10 urls need 95,368 shards; the cap holds
     assert buckets(10**10, 1 << 20, 8) == rounds.MAX_SHUFFLE_PARTITIONS
     assert buckets(10**10, 1 << 20, 48) == rounds.MAX_SHUFFLE_PARTITIONS
+
+
+def test_fat_row_spread_rule():
+    """The fat rows are spread only behind a broadcast fetch whose scan
+    gives fewer non-empty tasks, min(scan partitions, row groups), than
+    the scheduler's parallelism; a shuffle-hash fetch is spread by its
+    own exchange."""
+    from notjusthtml_searchengine_spark.plans.rounds import spread_fat_rows
+
+    # broadcast_fetch, scan_partitions, row_groups, parallelism -> spread
+    table = [
+        (False, 1, 1, 8, False),  # shuffle-hash fetch: never
+        (False, 64, 64, 8, False),
+        (True, 8, 8, 8, False),  # one full wave: enough
+        (True, 7, 64, 8, True),  # too few scan partitions
+        (True, 64, 7, 8, True),  # too few row groups
+        (True, 64, 0, 8, False),  # no footers read: the scan decides
+        (True, 7, 0, 8, True),
+        (True, 2, 2, 1, False),
+    ]
+    for broadcast, parts, groups, parallelism, expect in table:
+        assert spread_fat_rows(broadcast, parts, groups, parallelism) is expect, (
+            broadcast, parts, groups, parallelism,
+        )
+    # crawl_fat: one file of two row groups, split 8 ways, on 4 cores
+    assert spread_fat_rows(True, 8, 2, 4)
+    # the bench corpus: 48 files of at least one row group on 8 cores
+    assert not spread_fat_rows(True, 48, 48, 8)
+
+
+def test_fat_row_cache_rule():
+    """The gated fat rows are cached only when they came out of a
+    shuffle of the bodies and their estimated bytes fit in half of
+    storage memory; rows straight off the scan are re-derived."""
+    from notjusthtml_searchengine_spark.plans.rounds import cache_fat_rows
+
+    storage = 4_535_825_203  # the block manager of an 8g local driver
+    # the boundary: just under, at and just over half
+    assert cache_fat_rows(True, storage / 2 - 1, storage)
+    assert cache_fat_rows(True, storage / 2, storage)
+    assert not cache_fat_rows(True, storage / 2 + 1, storage)
+    assert not cache_fat_rows(True, 1, 0)
+    # straight off a broadcast-fetch scan: never, however small
+    assert not cache_fat_rows(False, 1, storage)
+    # crawl_fat's first round, spread: 1200 pages at the 8 KB prior
+    assert cache_fat_rows(True, 1200 * 8192, storage)
+    # design scale: a 10^8-page round of 60 KB pages on 100 executors
+    # of 28 GB storage each
+    assert not cache_fat_rows(True, 10**8 * 60_000, 100 * 28 * 10**9)
+
+
+def test_parquet_row_groups_from_footers(tmp_path):
+    """The spread rule's row-group count comes from the parquet footers
+    of a file or a directory tree, hidden files skipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from notjusthtml_searchengine_spark.plans.state import parquet_row_groups, parquet_rows
+
+    tbl = pa.table({"x": list(range(10))})
+    d = tmp_path / "pages.parquet"
+    d.mkdir()
+    for i in range(3):
+        pq.write_table(tbl, d / f"part-{i}.parquet", row_group_size=5)
+    pq.write_table(tbl, d / "_hidden.parquet")
+    assert parquet_row_groups(str(d / "part-0.parquet")) == 2
+    assert (parquet_row_groups(str(d)), parquet_rows(str(d))) == (6, 30)
+    assert parquet_row_groups(str(tmp_path / "absent")) == 0
