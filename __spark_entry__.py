@@ -46,7 +46,7 @@ def q_rating_theta_join(spark, sf_dir):
 
     The config-size flagged list is unrolled into ONE whole-stage-
     codegen projection + hash aggregate — the same construction the
-    round driver uses (crawl_ops.link_rating_expr); the general BNLJ
+    round driver uses (crawl_ops.rating_term_expr); the general BNLJ
     theta-join operator form remains crawl_ops.link_rating. Result is
     identical to the former broadcast-BNLJ form: each (doc, word)
     containment term is the same small-integer product, a non-matching

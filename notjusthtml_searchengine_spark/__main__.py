@@ -57,7 +57,6 @@ def main() -> None:
     ap.add_argument("--per-host-budget", type=int, default=64)
     ap.add_argument("--max-rounds", type=int, default=100)
     ap.add_argument("--no-bloom", action="store_true")
-    ap.add_argument("--no-media", action="store_true")
     ap.add_argument(
         "--face-detector", default="none",
         help="face detector plugin: none | fake | <model name>",
@@ -146,7 +145,6 @@ def main() -> None:
         round_budget=args.round_budget,
         per_host_budget=args.per_host_budget,
         bloom_prefilter=not args.no_bloom,
-        media=not args.no_media,
         face_detector=args.face_detector,
         fetch_robots_txt=args.fetch_robots,
     )

@@ -256,23 +256,6 @@ def rating_term_expr(
     return expr
 
 
-def link_rating_expr(keywords: DataFrame, flagged_rows: list[tuple[str, int]]) -> DataFrame:
-    """Unrolled form of link_rating for config-size flagged lists: the
-    containment tests compile into ONE whole-stage-codegen projection
-    instead of a nested-loop join that materializes |keywords|×|words|
-    intermediate rows. Bit-identical result (the summed terms are
-    small integers in double — order-independent); the round driver
-    uses this when the flagged list is config-sized, the BNLJ form
-    remains the general-operator path (J5)."""
-    return (
-        keywords.select(
-            "link_id", rating_term_expr(flagged_rows).alias("_r")
-        )
-        .groupBy("link_id")
-        .agg(F.sum("_r").alias("rating"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # P1/P2 + override — link priority (crawling.go:18-27, :48-53).
 # ---------------------------------------------------------------------------

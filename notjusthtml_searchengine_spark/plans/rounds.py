@@ -50,6 +50,7 @@ from ..session import EST_PAGE_BYTES
 from .state import (
     DRAINED_DDL,
     FRONTIER_DDL,
+    LEGACY_N_BUCKETS,
     SEEN_DDL,
     SITES_KEYS_DDL,
     CrawlState,
@@ -93,9 +94,6 @@ MAX_SHUFFLE_PARTITIONS = 4096
 # still fans out.
 MAX_TASK_WAVES = 8
 SPILL_GUARD_PARTITION_BYTES = 512 << 20
-# Bucket count of a crawl whose round-0 manifest predates the recorded
-# layout (the former fixed CrawlConfig default).
-LEGACY_N_BUCKETS = 32
 # Concurrent sink writers: the dozen per-round sink jobs are
 # individually tiny, so at 6 threads the flush ran two serial waves
 # whose second wave was latency, not throughput (the scheduler
@@ -118,7 +116,6 @@ class CrawlConfig:
     # logical round duration; with robots crawl_delay rules present,
     # a host's per-round cap becomes round_seconds*1000/crawl_delay_ms
     round_seconds: float | None = None
-    use_robots: bool = True
     # Self-ingest robots.txt inside the loop (north_rule): enqueue
     # <scheme>://<host>/robots.txt at PRIORITY_ROBOTS for every host
     # seen among candidates, parse fetched robots bodies into rules
@@ -135,7 +132,6 @@ class CrawlConfig:
     # included) reads, probes, merges and writes state with the
     # manifest's values
     shard_bits: int = 1 << 20
-    media: bool = True
     # face detector plugged into media/faces.py: "none" mirrors the
     # reference run without model files (no Face rows); "fake" is the
     # deterministic stub; a real model slots in by name.
@@ -186,7 +182,7 @@ def spread_fat_rows(
 
 def cache_fat_rows(shuffled: bool, est_bytes: float, storage_bytes: int) -> bool:
     """Whether a round caches its gated fat rows, which the extraction
-    pass, the blob join and the media gate each read, instead of
+    pass, the blob join and the media join each read, instead of
     re-deriving them per consumer. Rows that come straight off the
     pages scan behind a broadcast fetch are re-derived: decompression
     and the join probe scale with cores, cache traffic is memory
@@ -304,14 +300,14 @@ class CrawlEngine:
         self.flagged = ops.load_flagged_words(spark, flagged_path)
         # config-size list: collected ONCE at engine init so the rating
         # stage can unroll into a codegen expression (see
-        # crawl_ops.link_rating_expr); falls back to the BNLJ operator
+        # crawl_ops.rating_term_expr); falls back to the BNLJ operator
         # for unexpectedly large lists.
         self.flagged_rows = [
             (r["word"], r["priority"]) for r in self.flagged.collect()
         ]
         self.robots = (
             spark.read.schema(schemas.ROBOTS).parquet(robots_path)
-            if (robots_path and cfg.use_robots)
+            if robots_path
             else None
         )
         # memoized static robots view (see _robots_view)
@@ -619,7 +615,7 @@ class CrawlEngine:
         ok = meta.filter(F.col("gate") == "ok")
         self._content_sinks(rd, prev, ok)
         self._blob_sink(rd, ok, gated, broadcast_batch)
-        errors.append(self._media(rd, gated))
+        errors.append(self._media(rd, ok, gated, broadcast_batch))
         round_robots = self._robots_ingest(rd, gated)
         rated = self._links(rd, combined)
         cands = self._candidates(rated, rules, round_robots)
@@ -770,7 +766,7 @@ class CrawlEngine:
         gated = ops.gate_fetched(fetched)
         # Fat side (html) — consumed at most 3× (r6): the fused
         # extract+meta kernel pass, the blob-content join, and the
-        # media magic-byte gate. Spread over the cores when the scan
+        # media body join. Spread over the cores when the scan
         # gives too few tasks (hashing on url_hash alone spreads hot
         # hosts too: skew, §4.2), then either cached (serialized) or
         # re-derived per consumer from the compressed scan + fetch join
@@ -974,29 +970,24 @@ class CrawlEngine:
         )
         rd.sink(new_blobs, "content_blobs")
 
-    def _media(self, rd: _Round, gated: DataFrame) -> DataFrame | None:
+    def _media(
+        self, rd: _Round, ok: DataFrame, gated: DataFrame, broadcast_batch: bool
+    ) -> DataFrame:
         """P7 media branch → U5/U6 hashes, EXIF and faces. Returns the
-        hash-failure error rows (None with media off)."""
-        cfg = self.cfg
-        if not cfg.media:
-            return None
-        # pure-JVM magic-byte gate (equivalent to the WHATWG sniff for
-        # these two types) — avoids chaining a python sniff stage in
-        # front of the python media kernels
-        png_sig = F.expr("substring(html, 1, 8)") == F.lit(b"\x89PNG\r\n\x1a\n")
-        jpg_sig = F.expr("substring(html, 1, 3)") == F.lit(b"\xff\xd8\xff")
-        imgs = (
-            gated.filter(F.col("gate") == "ok")
-            .filter(png_sig | jpg_sig)
-            .select(
-                "url_norm",
-                F.xxhash64("url_norm", F.lit(rd.r)).alias("content_id"),
-                "html",
-                F.when(png_sig, "image/png").otherwise("image/jpeg").alias(
-                    "content_type"
-                ),
-            )
+        hash-failure error rows.
+
+        The images are the ok pages the fused pass sniffed as PNG or
+        JPEG (the sniff returns exactly these two strings for their
+        magic bytes). Their bodies are joined back from the fat rows
+        the way ``_blob_sink`` joins its winners, broadcast when the
+        batch is, so on a round without images AQE drops the join
+        against the empty broadcast and the fat rows are not read."""
+        keys = ok.filter(F.col("content_type").isin("image/png", "image/jpeg")).select(
+            "url_norm", "content_id", "content_type"
         )
+        if broadcast_batch:
+            keys = F.broadcast(keys)
+        imgs = gated.select("url_norm", "html").join(keys, "url_norm")
         hashed = rd.cache(
             imgs.withColumn("ph", phash_udf("html", "content_type"))
             .withColumn("ex", exif_udf("html"))
@@ -1021,12 +1012,12 @@ class CrawlEngine:
         # (reference html.go:146-159 → faceRecognition.go:13-19, Face
         # table DDL database.go:134). Detector is pluggable (no model
         # ships in this sandbox — see media/faces.py).
-        if cfg.face_detector != "none":
+        if self.cfg.face_detector != "none":
             from ..media.faces import detect_faces
 
             faces = detect_faces(
                 imgs, body_col="html", id_col="content_id",
-                detector=cfg.face_detector,
+                detector=self.cfg.face_detector,
             )
             rd.sink(faces, "faces")
         return _error_rows(

@@ -34,6 +34,9 @@ FRONTIER_DDL = (
 # round are dead in every part whose copy was added BEFORE that round
 DRAINED_DDL = "url_hash BIGINT, drained_round INT"
 SITES_KEYS_DDL = "site_id BIGINT"
+# Bucket count of a crawl whose round-0 manifest predates the recorded
+# layout (the former fixed CrawlConfig default).
+LEGACY_N_BUCKETS = 32
 
 
 def _parquet_footers(path: str) -> list:
@@ -157,6 +160,7 @@ class CrawlState:
         m = self.manifest(latest)
         if m is None:
             return []
+        n_buckets = int(m["stats"].get("n_buckets", LEGACY_N_BUCKETS))
         referenced = set(m["stats"].get("seen_parts", []))
         referenced.update(m["stats"].get("frontier_parts", []))
         referenced.update(m["stats"].get("drained_parts", []))
@@ -181,7 +185,8 @@ class CrawlState:
                     removed.append(rel)
                     if spark is not None:
                         spark.sql(
-                            f"DROP TABLE IF EXISTS {self.bucketed_table_name(rel)}"
+                            "DROP TABLE IF EXISTS "
+                            + self.bucketed_table_name(rel, n_buckets)
                         )
         return removed
 
@@ -281,9 +286,12 @@ class CrawlState:
     # plain-parquet stand-in for an Iceberg bucket-transform table; the
     # interface stays format-agnostic.
 
-    def bucketed_table_name(self, rel: str) -> str:
+    def bucketed_table_name(self, rel: str, n_buckets: int) -> str:
+        """Catalog name of a state table read or written at ``n_buckets``:
+        each bucket count gets its own entry, since a registered entry
+        keeps the bucket spec it was created with."""
         h = hashlib.md5(f"{self.root}:{rel}".encode()).hexdigest()[:12]
-        return f"njh_bkt_{h}"
+        return f"njh_bkt_{h}_{n_buckets}"
 
     def write_bucketed(
         self, df, r: int, name: str, n_buckets: int, bucket_col: str = "url_hash"
@@ -297,7 +305,7 @@ class CrawlState:
         from pyspark.sql import functions as F
 
         rel = f"r{r:05d}/{name}"
-        tbl = self.bucketed_table_name(rel)
+        tbl = self.bucketed_table_name(rel, n_buckets)
         spark = df.sparkSession
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         (
@@ -313,9 +321,10 @@ class CrawlState:
     def read_bucketed(
         self, spark, rel: str, ddl: str, n_buckets: int, bucket_col: str = "url_hash"
     ):
-        """Resolve a bucketed state table, re-registering the external
-        table from DDL if this session has not seen it (restart)."""
-        tbl = self.bucketed_table_name(rel)
+        """Resolve a bucketed state table at ``n_buckets``, registering
+        the external table from DDL if this session has not seen it at
+        that count (a restart, or a read under another count)."""
+        tbl = self.bucketed_table_name(rel, n_buckets)
         path = os.path.join(self.root, "rounds", rel)
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {tbl} ({ddl}) USING PARQUET "

@@ -16,8 +16,8 @@ from pyspark.sql import SparkSession
 
 # Reference design envelope: 20 MB per-page cap (main.go:20).
 MAX_FILESIZE = 20_000_000
-# Average page size assumed before any page of a crawl is measured: the
-# crawl's round-1 shuffle sizing and this module's input-volume guess.
+# Average page size assumed before any page of a crawl is measured (the
+# crawl's round-1 shuffle sizing).
 EST_PAGE_BYTES = 8192
 
 DEFAULT_CONFS: dict[str, str] = {
@@ -60,28 +60,6 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
-def _expected_input_bytes(input_bytes: int | None) -> int:
-    """Best-available estimate of the data volume this session will
-    process, for sizing allocation-rate-dependent JVM geometry (the
-    GC nursery below). Priority: explicit caller value >
-    $SPARK_GRAFT_INPUT_BYTES > $SPARK_GRAFT_BENCH_PAGES (the declared
-    bench-corpus size knob) x EST_PAGE_BYTES.
-    0 = unknown (small-scale defaults apply)."""
-    if input_bytes:
-        return int(input_bytes)
-    try:
-        env = int(os.environ.get("SPARK_GRAFT_INPUT_BYTES", "0"))
-    except ValueError:
-        env = 0
-    if env:
-        return env
-    try:
-        pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "0"))
-    except ValueError:
-        pages = 0
-    return pages * EST_PAGE_BYTES
-
-
 def _mem_to_g(mem: str) -> int:
     """'48g' / '4096m' / bare-number-of-bytes -> whole GB (floor 1)."""
     s = str(mem).strip().lower()
@@ -117,19 +95,14 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or local[*]).
-    ``shuffle_partitions`` defaults to the parallelism level so that
-    small-scale tests don't pay 200-partition scheduling overhead;
-    on a real cluster this is sized to ~2-3x total cores.
+    ``shuffle_partitions`` (also the default parallelism) defaults to
+    the master's core count, floor 8, so that small-scale tests don't
+    pay 200-partition scheduling overhead; on a real cluster this is
+    sized to ~2-3x total cores.
     ``input_bytes`` (optional) is the expected on-disk volume of the
     session's input data; it feeds the GC-nursery bound below.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 8)
-        except ValueError:
-            shuffle_partitions = 32
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
 
     # Bound the ParallelGC nursery, scaled to the session's core count
     # (~0.5 GB per concurrent task, floor 2g, cap 8g). ParallelGC
@@ -159,6 +132,8 @@ def get_spark(
     except ValueError:
         cores = 0
     cores = cores or (os.cpu_count() or 8)
+    if shuffle_partitions is None:
+        shuffle_partitions = max(cores, 8)
 
     # Merge the conf layers FIRST (defaults < env hook < computed
     # partitions < caller), so the nursery bound is derived from the
@@ -185,7 +160,7 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         confs[k] = v
     heap_g = _mem_to_g(confs.get("spark.driver.memory", "8g"))
-    nursery_g = _nursery_g(cores, heap_g, _expected_input_bytes(input_bytes))
+    nursery_g = _nursery_g(cores, heap_g, input_bytes or 0)
     for key in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
         confs[key] = f"{confs[key]} -XX:MaxNewSize={nursery_g}g"
 

@@ -8,10 +8,14 @@ relations with ratings, contents rows, and gate errors.
 
 from __future__ import annotations
 
+import collections
+import dataclasses
 import json
+import math
 import os
 import re
 import shutil
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +28,7 @@ from notjusthtml_searchengine_spark.plans.rounds import (
     state_buckets,
 )
 from notjusthtml_searchengine_spark.plans.state import CrawlState, parquet_rows
+from notjusthtml_searchengine_spark.sources.corpus import write_corpus
 from tests.sim import Simulator
 
 MAX_ROUNDS = 12
@@ -369,6 +374,102 @@ def test_union_sinks_written_at_round_shuffle_count(
             assert 0 < len(files) <= n, (s["round"], name)
 
 
+def _executions(store) -> list:
+    """The SQL executions the session's status store holds."""
+    it, out = store.executionsList().iterator(), []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _files_read_per_sink(store, executions, r: int) -> collections.Counter:
+    """Parquet files read by the round-``r`` sink writes among
+    ``executions``, by sink name."""
+    prefix, out = f"r{r:05d}:sink:", collections.Counter()
+    for e in executions:
+        if not e.description().startswith(prefix):
+            continue
+        values = store.executionMetrics(e.executionId())
+        nodes = store.planGraph(e.executionId()).allNodes()
+        for node in (nodes.apply(i) for i in range(nodes.size())):
+            if not node.name().startswith("Scan parquet"):
+                continue
+            metrics = node.metrics()
+            for m in (metrics.apply(j) for j in range(metrics.size())):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of files read" and v.isDefined():
+                    out[e.description()[len(prefix):]] += int(v.get())
+    return out
+
+
+def test_round_without_images_reads_no_pages_for_media(
+    spark, corpus_dir, tmp_path_factory
+):
+    """The media sinks of a round without images read no pages file:
+    their images come from the fused pass's sniff, and AQE drops the body
+    join against the empty broadcast. Round 1 fetches the two html
+    seeds. The fat rows are re-derived per consumer (the scale side), so
+    the blob sink scans the pages table in this round, and so would a
+    media branch that filtered the bodies itself."""
+    eng = _mk_engine(
+        spark, corpus_dir, tmp_path_factory.mktemp("state_no_images"),
+        per_host_budget=5, face_detector="fake",
+    )
+    parallelism = spark.sparkContext.defaultParallelism
+    eng._pages_scan = {"scan_partitions": parallelism, "row_groups": parallelism}
+    eng._storage_bytes = 0
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = {e.executionId() for e in _executions(store)}
+    stats = eng.run(max_rounds=1)
+    assert stats[0]["pages_fetched"] == 2 and not stats[0]["fat_rows"]["cached"]
+    files = _files_read_per_sink(
+        store, [e for e in _executions(store) if e.executionId() not in before], 1
+    )
+    assert files["content_blobs"] > 0, files
+    for sink in ("perceptual_hashes", "exif_info", "faces"):
+        assert files[sink] == 0, files
+
+
+def test_crawl_delay_caps_per_round_drains(spark, corpus, tmp_path_factory):
+    """With ``round_seconds`` set, a host whose robots row carries a
+    crawl delay drains at most max(1, floor(round_seconds*1000/delay))
+    urls per round, and every other host keeps the per-host budget."""
+    round_seconds, delay_ms, budget = 2.0, 1000, 3
+    cap = max(1, math.floor(round_seconds * 1000 / delay_ms))
+    delayed = corpus.robots[0]["host"]
+    robots = [{**corpus.robots[0], "crawl_delay_ms": delay_ms}]
+    corpus_delay = str(tmp_path_factory.mktemp("corpus_delay"))
+    write_corpus(dataclasses.replace(corpus, robots=robots), corpus_delay)
+    # without the delay, the host drains more than the cap in a round
+    sim = Simulator(corpus, per_host_budget=budget, round_budget=None, use_robots=True)
+    assert max(
+        sum(urlparse(u).hostname == delayed for u in urls)
+        for urls in sim.run(max_rounds=5).fetched_per_round
+    ) > cap
+    state_dir = tmp_path_factory.mktemp("state_delay")
+    eng = _mk_engine(
+        spark, corpus_delay, state_dir,
+        per_host_budget=budget, round_seconds=round_seconds, bloom_prefilter=False,
+    )
+    stats = eng.run(max_rounds=5)
+    drains = collections.Counter()
+    for s in stats:
+        if s.get("done"):
+            continue
+        rd = os.path.join(str(state_dir), "rounds", f"r{s['round']:05d}")
+        contents = spark.read.schema(schemas.CONTENTS).parquet(os.path.join(rd, "contents"))
+        errors = spark.read.schema(schemas.ERRORS).parquet(os.path.join(rd, "errors"))
+        urls = {r["url"] for r in contents.select("url").collect()} | {
+            r["url"]
+            for r in errors.filter(
+                F.col("error_code") != schemas.ERROR_CODES["ErrorPerceptualHash"]
+            ).collect()
+        }
+        drains.update((s["round"], urlparse(u).hostname) for u in urls)
+    assert max(n for (_, h), n in drains.items() if h == delayed) == cap, drains
+    assert max(n for (_, h), n in drains.items() if h != delayed) == budget, drains
+
+
 def test_resume_identical_to_uninterrupted(spark, corpus, corpus_dir, tmp_path_factory):
     """Kill after round 2 (simulate an uncommitted round 3), resume,
     and assert final state matches an uninterrupted run."""
@@ -440,7 +541,9 @@ def test_resume_keeps_bootstrap_state_layout(
     prev = eng.state.manifest(2)["stats"]
     for key in ("seen_parts", "frontier_parts", "drained_parts", "sites_parts"):
         for rel in prev[key]:
-            spark.sql(f"DROP TABLE IF EXISTS {eng.state.bucketed_table_name(rel)}")
+            spark.sql(
+                f"DROP TABLE IF EXISTS {eng.state.bucketed_table_name(rel, layout[0])}"
+            )
     eng_resume = _mk_engine(
         spark, corpus_dir, state_dir, per_host_budget=5, shard_bits=1 << 12
     )
@@ -493,7 +596,6 @@ def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
         spark, corpus_dir, state_dir,
         per_host_budget=5, bloom_prefilter=False,
         compact_seen_every=100,  # never compacts in this run
-        media=False,
     )
     stats = eng.run(max_rounds=6)
     fetch = [s for s in stats if not s.get("done")]

@@ -145,7 +145,7 @@ def test_bucketed_seen_anti_join_copartitioned(spark, tmp_path):
     ]
     # simulate a fresh session after restart: catalog entries gone
     for rel in rels:
-        spark.sql(f"DROP TABLE IF EXISTS {state.bucketed_table_name(rel)}")
+        spark.sql(f"DROP TABLE IF EXISTS {state.bucketed_table_name(rel, 8)}")
     parts = [state.read_bucketed(spark, rel, SEEN_DDL, 8) for rel in rels]
 
     cands = (
@@ -169,6 +169,27 @@ def test_bucketed_seen_anti_join_copartitioned(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_read_bucketed_at_another_count_gets_its_own_entry(spark, tmp_path):
+    """A state table written at 8 buckets and read at 16 in the same
+    session is read at 16: the writer's catalog entry keeps 8 buckets,
+    so each count is registered under its own name."""
+    from notjusthtml_searchengine_spark.plans.state import SEEN_DDL, CrawlState
+
+    state = CrawlState(str(tmp_path))
+    seen = (
+        spark.range(0, 500)
+        .select(F.concat(F.lit("http://h.ex/p/"), F.col("id").cast("string")).alias("url_norm"))
+        .withColumn("url_hash", F.xxhash64("url_norm"))
+        .withColumn("round_seen", F.lit(1))
+    )
+    rel = state.write_bucketed(seen, 1, "seen_delta", 8)
+    for n in (16, 8):
+        df = state.read_bucketed(spark, rel, SEEN_DDL, n)
+        plan = df.groupBy("url_hash").count()._jdf.queryExecution().executedPlan().toString()
+        assert f"SelectedBucketsCount: {n} out of {n}" in plan, (n, plan)
+        assert df.count() == 500
 
 
 def test_bucketed_pages_fetch_beyond_broadcast(spark, tmp_path):

@@ -56,7 +56,6 @@ def test_robots_fetched_in_loop_blocks_candidates(spark, tmp_path):
     cfg = CrawlConfig(
         state_dir=str(tmp_path / "state"),
         bloom_prefilter=False,
-        media=False,
         fetch_robots_txt=True,
     )
     eng = CrawlEngine(
@@ -136,7 +135,6 @@ def test_robots_first_holdback_and_drain_backstop(spark, tmp_path):
     cfg = CrawlConfig(
         state_dir=str(tmp_path / "state"),
         bloom_prefilter=False,
-        media=False,
         fetch_robots_txt=True,
     )
     eng = CrawlEngine(
