@@ -75,18 +75,18 @@ def build_shards(
 ) -> DataFrame:
     """Merge new urls (url_norm) into per-bucket shards → BLOOM_SHARDS df.
 
-    One groupBy(bucket) shuffle of the new urls; old shards are
-    cogrouped in (copy-on-write of touched buckets happens at the
-    write layer — untouched buckets pass through unchanged).
+    One groupBy(bucket) shuffle of the new urls. Without ``old_shards``
+    (a crawl's first bloom) each shard starts all-zero and a bucket no
+    url hashes to gets no row: the probe reads a missing shard as
+    all-zero. With them, the old shards are cogrouped in (copy-on-write
+    of touched buckets happens at the write layer — untouched buckets
+    pass through unchanged).
     """
     hashed = with_bucket(bloom_cols(new_urls).withColumn("url_hash", F.col("h1")), n_buckets)
-    spark = new_urls.sparkSession
-    if old_shards is None:
-        old_shards = spark.createDataFrame([], schemas.BLOOM_SHARDS)
 
-    def merge(key, new_pdf: pd.DataFrame, old_pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key, new_pdf: pd.DataFrame, old_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
         bucket = int(key[0])
-        if len(old_pdf):
+        if old_pdf is not None and len(old_pdf):
             bits = np.frombuffer(old_pdf.iloc[0]["bits"], dtype=np.uint8).copy()
             n_items = int(old_pdf.iloc[0]["n_items"])
         else:
@@ -100,11 +100,13 @@ def build_shards(
             [{"bucket": bucket, "n_items": n_items, "bits": bits.tobytes()}]
         )
 
-    return (
-        hashed.select("bucket", "h1", "h2")
-        .groupBy("bucket")
-        .cogroup(old_shards.groupBy("bucket"))
-        .applyInPandas(merge, schema=schemas.BLOOM_SHARDS)
+    grouped = hashed.select("bucket", "h1", "h2").groupBy("bucket")
+    if old_shards is None:
+        return grouped.applyInPandas(
+            lambda key, new_pdf: merge(key, new_pdf), schema=schemas.BLOOM_SHARDS
+        )
+    return grouped.cogroup(old_shards.groupBy("bucket")).applyInPandas(
+        merge, schema=schemas.BLOOM_SHARDS
     )
 
 

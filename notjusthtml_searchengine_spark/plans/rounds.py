@@ -342,11 +342,14 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------
     def bootstrap(self) -> None:
-        """Round 0: frontier from seeds at priority 90; empty seen/bloom.
+        """Round 0: the seed frontier at priority 90, and nothing else.
 
         Seeds do NOT enter the seen set (addStartSites never touches
         the bloom — crawling.go:153-175): a seed rediscovered as a
-        link is re-enqueued and re-fetched once, faithfully.
+        link is re-enqueued and re-fetched once, faithfully. So round 0
+        names no seen part (the robots rows below aside) and no bloom:
+        round 1's exact check against no parts is free, and it builds
+        the first bloom from the live seen set (see ``_bloom``).
 
         The state's bucket count is sized here, once, from the corpus
         row count in the pages table's parquet footers (no Spark job).
@@ -365,6 +368,7 @@ class CrawlEngine:
             .withColumn("round_added", F.lit(0))
             .withColumn("url_hash", F.xxhash64("url_norm"))
         )
+        seen_parts = []
         if self.cfg.fetch_robots_txt:
             # Pre-enqueue each seed host's robots.txt so even the SEED
             # fetch waits for rules: round 1's drain holds the seeds
@@ -375,34 +379,26 @@ class CrawlEngine:
             frontier = frontier.unionByName(
                 _robots_txt_urls(frontier).withColumn("round_added", F.lit(0))
             )
-        self.state.write_bucketed(frontier, r, "frontier_full", n_buckets)
-        seen0 = self.spark.createDataFrame([], schemas.SEEN)
-        if self.cfg.fetch_robots_txt:
             # the bootstrap robots rows enter seen immediately (unlike
             # seeds, which faithfully stay out — crawling.go:153-175):
             # the per-round candidate-stage prefetch relies on the seen
             # check to enqueue each host's robots exactly once, and a
             # seen-less bootstrap row would be re-added and re-fetched
-            # the first time its host shows up among candidates.
-            seen0 = seen0.unionByName(
-                frontier.filter(path_expr("url_norm") == "/robots.txt").select(
-                    "url_norm", "url_hash", F.lit(0).alias("round_seen")
-                )
+            # the first time its host shows up among candidates. Round 1
+            # builds them into the first bloom with its own new urls.
+            robots_seen = frontier.filter(path_expr("url_norm") == "/robots.txt").select(
+                "url_norm", "url_hash", F.lit(0).alias("round_seen")
             )
-        self.state.write_bucketed(seen0, r, "seen_full", n_buckets)
-        if self.cfg.bloom_prefilter:
-            shards = bloom_ops.build_shards(
-                seeds.limit(0), n_buckets, self.cfg.shard_bits
-            )
-            self._write(shards, r, "bloom")
+            seen_parts = [self.state.write_bucketed(robots_seen, r, "seen_full", n_buckets)]
+        self.state.write_bucketed(frontier, r, "frontier_full", n_buckets)
         self.state.commit_round(
             r,
             {
-                "seen_parts": [f"r{r:05d}/seen_full"],
+                "seen_parts": seen_parts,
                 "frontier_parts": [f"r{r:05d}/frontier_full"],
                 "drained_parts": [],
                 "sites_parts": [],
-                "bloom": f"r{r:05d}/bloom" if self.cfg.bloom_prefilter else None,
+                "bloom": None,
                 "pages_fetched": 0,
                 "n_buckets": n_buckets,
                 "shard_bits": self.cfg.shard_bits,
@@ -423,7 +419,10 @@ class CrawlEngine:
 
     def _read_seen(self, parts: list[str], n_buckets: int) -> DataFrame:
         """Union view of all seen parts (membership queries/tests);
-        ``n_buckets`` is the manifest's."""
+        ``n_buckets`` is the manifest's. No parts (round 0 without
+        robots rows) is an empty seen set."""
+        if not parts:
+            return self.spark.read.schema(SEEN_DDL).parquet()
         return _union(self._seen_parts(parts, n_buckets))
 
     def _size_shuffle(self, pred_batch: int, avg_page_bytes: float) -> int | None:
@@ -621,7 +620,7 @@ class CrawlEngine:
         cands = self._candidates(rated, rules, round_robots)
         new = self._seen(rd, prev, cands, seen_dfs)
         new_frontier = self._frontier(rd, prev, frontier, batch_use, new)
-        self._bloom(rd, prev, new)
+        self._bloom(rd, prev, new, seen_dfs)
         errors.append(err_robots)
         # The union sinks would concatenate their inputs' partitions
         # (an 80-task stage for a few thousand rows); they are written
@@ -1167,7 +1166,12 @@ class CrawlEngine:
         self, rd: _Round, prev: dict, cands: DataFrame, seen_dfs: list[DataFrame]
     ) -> DataFrame:
         """J2 seen check (U8 bloom pre-filter + exact anti-join) and the
-        seen-state write. Returns the cached never-seen candidates."""
+        seen-state write. Returns the cached never-seen candidates.
+
+        A round whose previous manifest has no bloom (round 1, or a
+        resume that turns the filter on) does not probe: the exact
+        anti-join against the live seen parts is the whole check, and
+        against no parts it is free."""
         if self.cfg.bloom_prefilter and prev.get("bloom"):
             probed = rd.cache(
                 bloom_ops.probe_shards(
@@ -1236,16 +1240,29 @@ class CrawlEngine:
             rd.stats["drained_parts"] = prev.get("drained_parts", []) + [f"r{r:05d}/drained"]
         return new_frontier
 
-    def _bloom(self, rd: _Round, prev: dict, new: DataFrame) -> None:
-        """U8: merge this round's new urls into the bloom shards."""
+    def _bloom(
+        self, rd: _Round, prev: dict, new: DataFrame, seen_dfs: list[DataFrame]
+    ) -> None:
+        """U8: merge this round's new urls into the bloom shards. A round
+        whose previous manifest has no bloom builds the first one from
+        the live seen parts plus its new urls, so the filter holds the
+        whole seen set (the bootstrap's robots rows included)."""
         rd.stats["bloom"] = None
-        if self.cfg.bloom_prefilter:
+        if not self.cfg.bloom_prefilter:
+            return
+        urls = new.select("url_norm")
+        if prev.get("bloom"):
             shards = bloom_ops.build_shards(
-                new.select("url_norm"), rd.n_buckets, rd.shard_bits,
-                self._bloom_shards(prev),
+                urls, rd.n_buckets, rd.shard_bits, self._bloom_shards(prev)
             )
-            rd.sink(shards, "bloom")
-            rd.stats["bloom"] = f"r{rd.r:05d}/bloom"
+        else:
+            shards = bloom_ops.build_shards(
+                _union([*(s.select("url_norm") for s in seen_dfs), urls]),
+                rd.n_buckets,
+                rd.shard_bits,
+            )
+        rd.sink(shards, "bloom")
+        rd.stats["bloom"] = f"r{rd.r:05d}/bloom"
 
     def _flush(self, rd: _Round) -> None:
         """Run the queued sink writes concurrently: each write is its own

@@ -39,3 +39,19 @@ def test_bloom_incremental_merge(spark):
     probed = probe_shards(both, shards2, N_BUCKETS, BITS)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
     assert shards2.agg(F.sum("n_items")).first()[0] == 200
+
+
+def test_first_bloom_is_one_grouped_pass(spark):
+    """A bloom with no old shards (a crawl's first) is one grouped pass
+    over the urls: no cogroup, and no Python-built empty frame to
+    cogroup with. A bucket no url hashes to gets no row."""
+    urls = spark.range(3).select(
+        F.concat(F.lit("http://a/"), F.col("id").cast("string")).alias("url_norm")
+    )
+    shards = build_shards(urls, N_BUCKETS, BITS)
+    plan = shards._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan and "ExistingRDD" not in plan
+    rows = shards.collect()
+    assert 0 < len(rows) <= 3 and sum(r["n_items"] for r in rows) == 3
+    assert probe_shards(urls, shards, N_BUCKETS, BITS).filter(~F.col("maybe_seen")).count() == 0

@@ -583,6 +583,70 @@ def test_resume_keeps_bootstrap_state_layout(
                     assert bucket < layout[0], (s["round"], tbl, f)
 
 
+def test_bootstrap_writes_only_the_frontier(
+    spark, corpus_dir, tmp_path_factory, monkeypatch
+):
+    """Round 0 of the shipped configuration is the seed frontier alone:
+    no seen part and no bloom. Round 1, whose previous manifest has no
+    bloom, runs no probe (the exact check against no seen parts is the
+    whole check) and builds the first bloom; round 2 probes it."""
+    eng = _mk_engine(
+        spark, corpus_dir, tmp_path_factory.mktemp("state_boot"), per_host_budget=5
+    )
+    eng.bootstrap()
+    m = eng.state.manifest(0)
+    assert m["tables"] == ["frontier_full"]
+    assert sorted(os.listdir(eng.state.round_dir(0))) == ["frontier_full", "manifest.json"]
+    assert m["stats"]["seen_parts"] == [] and m["stats"]["bloom"] is None
+    assert eng._read_seen([], m["stats"]["n_buckets"]).count() == 0
+
+    probes = []
+    probe = bloom_ops.probe_shards
+
+    def record(*args):
+        probes.append(args)
+        return probe(*args)
+
+    monkeypatch.setattr(bloom_ops, "probe_shards", record)
+    eng.run_round(1)
+    assert len(probes) == 0
+    assert eng.state.manifest(1)["stats"]["bloom"] == "r00001/bloom"
+    eng.run_round(2)
+    assert len(probes) == 1
+
+
+def test_resume_turns_the_bloom_on(spark, corpus, corpus_dir, tmp_path_factory):
+    """A crawl run with the bloom off and resumed with it on builds its
+    first bloom from the live seen set at the resumed round: contents
+    and seen set equal the simulator's uninterrupted run, and every seen
+    url is bloom-positive at the end."""
+    state_dir = tmp_path_factory.mktemp("state_bloom_on")
+    eng = _mk_engine(spark, corpus_dir, state_dir, per_host_budget=5, bloom_prefilter=False)
+    eng.bootstrap()
+    eng.run_round(1)
+    eng.run_round(2)
+    assert eng.state.manifest(2)["stats"]["bloom"] is None
+    eng_resume = _mk_engine(spark, corpus_dir, state_dir, per_host_budget=5)
+    eng_resume.run(max_rounds=MAX_ROUNDS)
+    assert eng_resume.state.manifest(3)["stats"]["bloom"] == "r00003/bloom"
+    sim_res = Simulator(corpus, per_host_budget=5, round_budget=None, use_robots=True).run(
+        max_rounds=MAX_ROUNDS
+    )
+    contents = [
+        (r["url"], r["round"])
+        for r in _read_sink(spark, state_dir, "contents", schemas.CONTENTS).collect()
+    ]
+    assert len(contents) == len(sim_res.contents)
+    assert set(contents) == sim_res.contents
+    assert _read_last_seen(spark, corpus_dir, state_dir) == sim_res.seen
+    m = eng_resume.state.manifest(eng_resume.state.latest_committed_round())["stats"]
+    seen = eng_resume._read_seen(m["seen_parts"], m["n_buckets"])
+    probed = bloom_ops.probe_shards(
+        seen.select("url_norm"), eng_resume._bloom_shards(m), m["n_buckets"], m["shard_bits"]
+    )
+    assert probed.filter(~F.col("maybe_seen")).count() == 0
+
+
 def test_incremental_frontier_write_volume(spark, corpus_dir, tmp_path_factory):
     """The frontier is NEVER fully rewritten off the compaction
     cadence: each round writes only frontier_delta (this round's new

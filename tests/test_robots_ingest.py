@@ -7,6 +7,7 @@ and its first content page arrive in the same batch."""
 
 from __future__ import annotations
 
+import collections
 import os
 from datetime import datetime, timezone
 
@@ -21,18 +22,9 @@ TS = datetime(2026, 1, 1, tzinfo=timezone.utc)
 A, B = "http://a.ex", "http://b.ex"
 
 
-def _corpus(tmp_path):
-    # anchor 'zebra zebra' rates 1*2*11=22 > 20 → link promoted
-    pages = {
-        f"{A}/": f'<html><body><a href="{B}/">zebra zebra</a></body></html>',
-        f"{B}/": (
-            f'<html><body><a href="{B}/blocked/x">zebra zebra</a>'
-            f'<a href="{B}/ok">zebra zebra</a></body></html>'
-        ),
-        f"{B}/robots.txt": "User-agent: *\nDisallow: /blocked\n",
-        f"{B}/ok": "<html><body><p>fine</p></body></html>",
-        f"{B}/blocked/x": "<html><body><p>must never be fetched</p></body></html>",
-    }
+def _write_corpus(tmp_path, pages: dict[str, str], seeds: list[str]):
+    """pages.parquet (one row per url: body), seeds.txt and flagged.csv
+    under ``tmp_path/corpus``."""
     urls = list(pages)
     tbl = pa.table(
         {
@@ -46,9 +38,24 @@ def _corpus(tmp_path):
     d = tmp_path / "corpus"
     d.mkdir()
     pq.write_table(tbl, str(d / "pages.parquet"))
-    (d / "seeds.txt").write_text(f"{A}/\n")
+    (d / "seeds.txt").write_text("".join(f"{u}\n" for u in seeds))
     (d / "flagged.csv").write_text("zebra,11\n")
     return d
+
+
+def _corpus(tmp_path):
+    # anchor 'zebra zebra' rates 1*2*11=22 > 20 → link promoted
+    pages = {
+        f"{A}/": f'<html><body><a href="{B}/">zebra zebra</a></body></html>',
+        f"{B}/": (
+            f'<html><body><a href="{B}/blocked/x">zebra zebra</a>'
+            f'<a href="{B}/ok">zebra zebra</a></body></html>'
+        ),
+        f"{B}/robots.txt": "User-agent: *\nDisallow: /blocked\n",
+        f"{B}/ok": "<html><body><p>fine</p></body></html>",
+        f"{B}/blocked/x": "<html><body><p>must never be fetched</p></body></html>",
+    }
+    return _write_corpus(tmp_path, pages, [f"{A}/"])
 
 
 def test_robots_fetched_in_loop_blocks_candidates(spark, tmp_path):
@@ -116,21 +123,7 @@ def test_robots_first_holdback_and_drain_backstop(spark, tmp_path):
         f"{B}/blocked/seed": "<html><body><p>never fetch me</p></body></html>",
         f"{B}/open": "<html><body><p>fine</p></body></html>",
     }
-    urls = list(pages)
-    tbl = pa.table(
-        {
-            "url": urls,
-            "warc_ts": pa.array([TS] * len(urls), pa.timestamp("us", tz="UTC")),
-            "html": pa.array([pages[u].encode() for u in urls], pa.binary()),
-            "text": [""] * len(urls),
-            "lang": ["en"] * len(urls),
-        }
-    )
-    d = tmp_path / "corpus"
-    d.mkdir()
-    pq.write_table(tbl, str(d / "pages.parquet"))
-    (d / "seeds.txt").write_text(f"{B}/blocked/seed\n{B}/open\n")
-    (d / "flagged.csv").write_text("zebra,11\n")
+    d = _write_corpus(tmp_path, pages, [f"{B}/blocked/seed", f"{B}/open"])
 
     cfg = CrawlConfig(
         state_dir=str(tmp_path / "state"),
@@ -168,3 +161,39 @@ def test_robots_first_holdback_and_drain_backstop(spark, tmp_path):
         F.col("url") == f"{B}/robots.txt"
     ).count()
     assert n_robots_fetches == 1
+
+
+def test_robots_fetched_once_under_the_bloom(spark, tmp_path):
+    """The bootstrap's robots rows are in the seen set AND in the first
+    bloom: with the shipped pre-filter on, a later round's robots
+    prefetch for the seed host (its /open page links to another page of
+    the host) is bloom-positive, the exact check drops it, and
+    robots.txt is fetched once."""
+    pages = {
+        f"{B}/robots.txt": "User-agent: *\nDisallow: /blocked\n",
+        f"{B}/blocked/seed": "<html><body><p>never fetch me</p></body></html>",
+        f"{B}/open": f'<html><body><a href="{B}/more">zebra zebra</a></body></html>',
+        f"{B}/more": "<html><body><p>fine</p></body></html>",
+    }
+    d = _write_corpus(tmp_path, pages, [f"{B}/blocked/seed", f"{B}/open"])
+    state_dir = str(tmp_path / "state")
+    eng = CrawlEngine(
+        spark,
+        pages_path=str(d / "pages.parquet"),
+        seeds_path=str(d / "seeds.txt"),
+        flagged_path=str(d / "flagged.csv"),
+        robots_path=None,
+        cfg=CrawlConfig(state_dir=state_dir, fetch_robots_txt=True),
+    )
+    assert eng.cfg.bloom_prefilter
+    eng.run(max_rounds=8)
+    contents = spark.read.schema(schemas.CONTENTS).parquet(
+        os.path.join(state_dir, "rounds", "r*", "contents")
+    )
+    rounds = collections.defaultdict(list)
+    for row in contents.collect():
+        rounds[row["url"]].append(row["round"])
+    # /more was discovered in round 2 with the host's robots prefetch
+    # among the candidates, and fetched in round 3
+    assert rounds[f"{B}/open"] == [2] and rounds[f"{B}/more"] == [3], rounds
+    assert rounds[f"{B}/robots.txt"] == [1], rounds
