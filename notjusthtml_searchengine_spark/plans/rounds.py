@@ -536,11 +536,19 @@ class CrawlEngine:
             for p in stats["frontier_parts"]
         ]
         drained_parts = stats.get("drained_parts", [])
-        # Per-PART tombstone filtering, BEFORE the union: a union of
-        # bucketed scans loses HashPartitioning (Spark never propagates
-        # it through Union), so the old union-then-join paid one full
-        # O(frontier) exchange per round — at a 10^10-row frontier
-        # that is a per-round full-state shuffle. Joining each bucketed
+        # Per-PART tombstone filtering, BEFORE the union. Spark 4.1.2
+        # (spark.sql.unionOutputPartitioning, on by default) reports
+        # the parts' shared hash partitioning through a Union, but
+        # over bucketed scans read by the vectorized parquet reader
+        # the union's columnar path concatenates the partitions
+        # instead of zipping them: a groupBy(url_hash) above such a
+        # union splits a key over several groups (tests/test_plans.py
+        # pins the frontier case), and an anti-join above it still
+        # shuffles the union side — at a 10^10-row frontier a
+        # per-round full-state exchange. The per-part joins emit rows,
+        # not columnar batches, so the union below is safe (a frontier
+        # of several parts always has tombstones: a round that adds a
+        # delta part also adds a drained part). Joining each bucketed
         # frontier part against each co-bucketed drained part is
         # exchange-free on BOTH sides (scan partitioning == join key),
         # and `round_added >= max_j(drained_round_j)` factors into the
@@ -641,9 +649,10 @@ class CrawlEngine:
         rd.phase_ms["pre_flush"] = _ms(rd.t0)
         self._flush(rd)
         stats = self._commit(rd, new_frontier)
-        # batch/combined are localCheckpoint'd (not persisted) — their
-        # blocks are released by the ContextCleaner when the round's
-        # references drop
+        # batch/combined are localCheckpoint'd (not persisted), each in
+        # its own phase (drain+stats, extract) — their blocks are
+        # released by the ContextCleaner when the round's references
+        # drop
         for df in rd.cached:
             df.unpersist()
         return stats
@@ -794,20 +803,26 @@ class CrawlEngine:
         # (r6): sniff/sha1/sha512/size ride the same scan that feeds
         # U1 instead of a second full corpus decode per round (the
         # kernel's hashlib/sniff outputs are byte-identical to the
-        # former JVM expressions — parity pinned in tests). Lazy
-        # localCheckpoint at the serialized level: one materialization
-        # under cache locks, short plans for every consumer.
-        combined = extract_with_meta(
-            gated.select(
-                "url_norm",
-                "host",
-                "depth",
-                F.unix_micros("warc_ts").alias("time_found"),
-                "gate",
-                "html",
-            ),
-            url_col="url_norm",
-        ).localCheckpoint(eager=False, storageLevel=_CACHE)
+        # former JVM expressions — parity pinned in tests). Eager
+        # localCheckpoint at the serialized level, in a phase of its
+        # own: the sinks only read the finished checkpoint, so the
+        # pass's cost is billed to ``extract`` and a failure of the
+        # pass raises here. Built lazily inside the concurrent flush,
+        # the sink jobs race to build it: when its tasks fail they
+        # deadlock on each other's cache locks instead of raising, and
+        # they flood the log with non-existent-accumulator errors.
+        with rd._phase("extract"):
+            combined = extract_with_meta(
+                gated.select(
+                    "url_norm",
+                    "host",
+                    "depth",
+                    F.unix_micros("warc_ts").alias("time_found"),
+                    "gate",
+                    "html",
+                ),
+                url_col="url_norm",
+            ).localCheckpoint(eager=True, storageLevel=_CACHE)
         # Skinny meta cache: one row per fetched page; the dozen sink/
         # stat consumers below scan this cheap projection instead of
         # the 30x-larger combined frame.
@@ -1266,8 +1281,9 @@ class CrawlEngine:
 
     def _flush(self, rd: _Round) -> None:
         """Run the queued sink writes concurrently: each write is its own
-        Spark job, the persisted parents are materialized once under the
-        cache's per-partition locks, and the scheduler overlaps the jobs,
+        Spark job reading the checkpointed batch and extraction output,
+        the persisted parents are materialized once under the cache's
+        per-partition locks, and the scheduler overlaps the jobs,
         hiding the per-job launch latency a dozen sequential ~0.5 s jobs
         would add to every small round."""
 

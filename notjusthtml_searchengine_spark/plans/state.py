@@ -71,26 +71,6 @@ def parquet_row_groups(path: str) -> int:
 
 
 class CrawlState:
-    FRONTIER = "frontier"
-    SEEN = "seen"
-    BLOOM = "bloom"
-    SINKS = (
-        "contents",
-        "content_blobs",
-        "link_rels",
-        "link_keywords",
-        "errors",
-        "metrics",
-        "round_stats",
-        "perceptual_hashes",
-        "exif_info",
-        "faces",
-        "sites",
-        "domains",
-        "content_types",
-        "robots",
-    )
-
     def __init__(self, root: str):
         self.root = root
         os.makedirs(os.path.join(root, "rounds"), exist_ok=True)
@@ -132,11 +112,8 @@ class CrawlState:
         return best
 
     # state tables are superseded by newer rounds; sinks are the
-    # engine's OUTPUT and are never touched by retention. ("frontier"
-    # is the legacy pre-delta full-rewrite table name, kept so GC can
-    # clean up old state dirs.)
+    # engine's OUTPUT and are never touched by retention.
     STATE_TABLES = (
-        "frontier",
         "frontier_full",
         "frontier_delta",
         "drained",
@@ -165,8 +142,6 @@ class CrawlState:
         referenced.update(m["stats"].get("frontier_parts", []))
         referenced.update(m["stats"].get("drained_parts", []))
         referenced.update(m["stats"].get("sites_parts", []))
-        if m["stats"].get("frontier"):  # legacy single-table layout
-            referenced.add(m["stats"]["frontier"])
         if m["stats"].get("bloom"):
             referenced.add(m["stats"]["bloom"])
         removed = []

@@ -15,6 +15,9 @@ import math
 import os
 import re
 import shutil
+import signal
+import subprocess
+import sys
 from urllib.parse import urlparse
 
 import pytest
@@ -34,13 +37,13 @@ from tests.sim import Simulator
 MAX_ROUNDS = 12
 
 
-def _mk_engine(spark, corpus_dir, state_dir, **cfg_kw):
+def _mk_engine(spark, corpus_dir, state_dir, flagged_path=None, **cfg_kw):
     cfg = CrawlConfig(state_dir=str(state_dir), **cfg_kw)
     return CrawlEngine(
         spark,
         pages_path=os.path.join(corpus_dir, "pages.parquet"),
         seeds_path=os.path.join(corpus_dir, "seeds.txt"),
-        flagged_path=os.path.join(corpus_dir, "flaggedWords.csv"),
+        flagged_path=flagged_path or os.path.join(corpus_dir, "flaggedWords.csv"),
         robots_path=os.path.join(corpus_dir, "robots.parquet"),
         cfg=cfg,
     )
@@ -324,7 +327,9 @@ def test_phase_timings_in_manifest(run_pair):
         if s.get("done"):
             continue
         m = eng.state.manifest(s["round"])
-        assert {"pre_flush", "flush", "counters"} <= set(m["stats"]["phase_ms"])
+        assert {"drain+stats", "extract", "pre_flush", "flush", "counters"} <= set(
+            m["stats"]["phase_ms"]
+        )
         assert set(m["stats"]["sink_ms"]) == set(m["tables"]) - {"round_stats"}
 
 
@@ -374,12 +379,9 @@ def test_union_sinks_written_at_round_shuffle_count(
             assert 0 < len(files) <= n, (s["round"], name)
 
 
-def _executions(store) -> list:
-    """The SQL executions the session's status store holds."""
-    it, out = store.executionsList().iterator(), []
-    while it.hasNext():
-        out.append(it.next())
-    return out
+def _seq(seq) -> list:
+    """A Scala Seq as a list."""
+    return [seq.apply(i) for i in range(seq.size())]
 
 
 def _files_read_per_sink(store, executions, r: int) -> collections.Counter:
@@ -419,15 +421,164 @@ def test_round_without_images_reads_no_pages_for_media(
     eng._pages_scan = {"scan_partitions": parallelism, "row_groups": parallelism}
     eng._storage_bytes = 0
     store = spark._jsparkSession.sharedState().statusStore()
-    before = {e.executionId() for e in _executions(store)}
+    before = {e.executionId() for e in _seq(store.executionsList())}
     stats = eng.run(max_rounds=1)
     assert stats[0]["pages_fetched"] == 2 and not stats[0]["fat_rows"]["cached"]
     files = _files_read_per_sink(
-        store, [e for e in _executions(store) if e.executionId() not in before], 1
+        store, [e for e in _seq(store.executionsList()) if e.executionId() not in before], 1
     )
     assert files["content_blobs"] > 0, files
     for sink in ("perceptual_hashes", "exif_info", "faces"):
         assert files[sink] == 0, files
+
+
+def _stage_scopes(store, stage_id: int) -> list[str]:
+    """Names of the operator scopes in a stage's RDD graph."""
+    out, todo = [], [store.operationGraphForStage(stage_id).rootCluster()]
+    while todo:
+        cluster = todo.pop()
+        out.append(cluster.name())
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return out
+
+
+def test_extract_phase_runs_the_fused_pass(spark, corpus_dir, tmp_path_factory):
+    """The fused extract+meta pass is billed to its own phase: round 1's
+    MapInPandas stage runs in the ``r00001:extract`` job and in no sink
+    write, and every sink the manifest times has a job that ran tasks.
+    The status store keeps a bounded number of stages and drops first
+    those that ran no task, so the ids of skipped stages may be gone."""
+    eng = _mk_engine(
+        spark, corpus_dir, tmp_path_factory.mktemp("state_phases"), per_host_budget=5
+    )
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    before = {j.jobId() for j in _seq(store.jobsList(None))}
+    stats = eng.run(max_rounds=1)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    stages = collections.defaultdict(list)
+    for stage in _seq(store.stageList(None, False, False, no_quantiles, None)):
+        stages[stage.stageId()].append(stage)
+    udf_jobs, run_ms = set(), collections.Counter()
+    for job in _seq(store.jobsList(None)):
+        if job.jobId() in before or not job.description().isDefined():
+            continue
+        desc = job.description().get()
+        if not desc.startswith("r00001:"):
+            continue
+        it = job.stageIds().iterator()
+        while it.hasNext():
+            stage_id = it.next()
+            for attempt in stages.get(stage_id, ()):
+                run_ms[desc] += attempt.executorRunTime()
+                if attempt.numCompleteTasks() and "MapInPandas" in _stage_scopes(
+                    store, stage_id
+                ):
+                    udf_jobs.add(desc)
+    assert udf_jobs == {"r00001:extract"}, udf_jobs
+    sinks = {f"r00001:sink:{name}" for name in stats[0]["sink_ms"]}
+    assert sinks <= {d for d, ms in run_ms.items() if ms > 0}, run_ms
+
+
+# A one-round crawl of the test corpus whose Python workers cannot
+# import the package: the driver puts the repository (argv[1]) on its
+# own sys.path, the workers start in the working directory.
+_CRAWL_WITHOUT_PACKAGE_ON_WORKERS = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from notjusthtml_searchengine_spark.plans.rounds import CrawlConfig, CrawlEngine
+from notjusthtml_searchengine_spark.session import get_spark
+from notjusthtml_searchengine_spark.sources.corpus import build_corpus, write_corpus
+
+corpus = os.path.abspath("corpus")
+write_corpus(build_corpus(n_pages=40, seed=42), corpus)
+spark = get_spark(app_name="no-package-on-workers", master="local[4]")
+CrawlEngine(
+    spark, *(os.path.join(corpus, f) for f in (
+        "pages.parquet", "seeds.txt", "flaggedWords.csv", "robots.parquet"
+    )),
+    CrawlConfig(state_dir=os.path.abspath("state"), per_host_budget=5),
+).run(max_rounds=1)
+"""
+
+
+def test_failed_extraction_raises_instead_of_hanging(tmp_path):
+    """A round whose extraction pass fails raises in the driver instead of
+    leaving its concurrent sink writes waiting on each other. The crawl
+    runs in a process of its own, in a temporary directory and with a
+    PYTHONPATH that does not name the repository, so every Python worker
+    fails to import the package; the process group (the JVM included) is
+    killed if it has not exited after 120 s."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    pythonpath = [
+        p for p in env.pop("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    ]
+    if pythonpath:
+        env["PYTHONPATH"] = os.pathsep.join(pythonpath)
+    env.update(
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_GRAFT_WAREHOUSE=str(tmp_path / "warehouse"),
+        SPARK_LOCAL_DIRS=str(tmp_path / "local"),
+    )
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _CRAWL_WITHOUT_PACKAGE_ON_WORKERS, repo],
+        cwd=tmp_path,
+        env=env,
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.PIPE,
+        text=True,
+        start_new_session=True,
+    )
+    try:
+        _, err = proc.communicate(timeout=120)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.communicate()
+        pytest.fail("the crawl was still running 120 s after its workers failed")
+    assert proc.returncode != 0
+    assert "ModuleNotFoundError" in err, err[-2000:]
+
+
+def test_long_flagged_list_rates_like_the_short_one(
+    spark, corpus, corpus_dir, tmp_path_factory
+):
+    """A flagged list of more than 512 words rates links through the
+    keyword join (``crawl_ops.link_rating``) instead of the unrolled
+    expression. The corpus's words padded to 600 with words that never
+    match give the same link ratings and frontier priorities as the
+    corpus's own list."""
+    long_csv = tmp_path_factory.mktemp("flagged_long") / "flaggedWords.csv"
+    with open(long_csv, "w") as f:
+        for word, prio in corpus.flagged:
+            f.write(f"{word},{prio}\n")
+        for i in range(600 - len(corpus.flagged)):
+            f.write(f"qqzx{i:03d}never,{i % 9 + 1}\n")
+    runs = {}
+    for name, flagged_path in (("short", None), ("long", str(long_csv))):
+        state_dir = tmp_path_factory.mktemp(f"state_flagged_{name}")
+        eng = _mk_engine(
+            spark, corpus_dir, state_dir, flagged_path=flagged_path, per_host_budget=5
+        )
+        assert (len(eng.flagged_rows) > 512) is (name == "long")
+        eng.run(max_rounds=2)
+        rels = _read_sink(spark, state_dir, "link_rels", schemas.LINK_RELS)
+        frontier = _read_sink(spark, state_dir, "frontier_delta", schemas.FRONTIER)
+        runs[name] = tuple(
+            {tuple(r) for r in df.select(*cols).collect()}
+            for df, cols in (
+                (rels, ("round", "origin_url", "dest_url", "rating")),
+                (frontier, ("round_added", "url_norm", "priority")),
+            )
+        )
+    rels, frontier = runs["short"]
+    assert {r[0] for r in rels} == {1, 2} and frontier
+    assert any(r[3] > 20 for r in rels)  # flagged words promote some links
+    assert runs["long"] == runs["short"]
 
 
 def test_crawl_delay_caps_per_round_drains(spark, corpus, tmp_path_factory):

@@ -336,9 +336,10 @@ def test_drain_budget_topk_two_phase_under_host_caps(spark):
 def test_frontier_view_tombstone_filter_exchange_free(spark, tmp_path):
     """The incremental frontier's live view must NOT shuffle the
     frontier: tombstone filtering happens per bucketed part via
-    co-partitioned joins BEFORE the union (a union of bucketed scans
-    loses HashPartitioning, so the old union-then-join paid one full
-    O(frontier) exchange per round). Semantics are unchanged: a row is
+    co-partitioned joins BEFORE the union (a join above a union of the
+    bucketed scans still exchanges the union side, so the old
+    union-then-join paid one full O(frontier) exchange per round).
+    Semantics are unchanged: a row is
     live iff round_added >= every matching tombstone's drained_round
     (the >= keeps the same-round seed re-enqueue quirk)."""
     from notjusthtml_searchengine_spark.plans.rounds import CrawlEngine
@@ -418,6 +419,56 @@ def test_frontier_view_same_round_readd_survives(spark, tmp_path):
     eng.spark = spark
     eng.state = state
     assert eng._frontier_view(stats, 8).count() == 1
+
+
+def test_frontier_view_rediscovered_seed_drains_once(spark, tmp_path):
+    """A seed still queued in the bootstrap's frontier_full and
+    rediscovered into round 1's frontier_delta is live in both parts, and
+    the drain over the live view returns it once. Spark 4.1.2 reports the
+    parts' bucket partitioning through a union of the raw bucketed scans
+    but concatenates their partitions, so the drain's exchange-free
+    collapse straight over that union would return the seed twice; the
+    view's per-part tombstone joins emit rows, which the union keeps
+    together."""
+    from notjusthtml_searchengine_spark.operators.crawl_ops import drain_frontier
+    from notjusthtml_searchengine_spark.plans.rounds import CrawlEngine
+    from notjusthtml_searchengine_spark.plans.state import CrawlState
+
+    state = CrawlState(str(tmp_path))
+    url = lambda name: F.concat(F.lit("http://h.ex/"), F.lit(name))
+    mk_front = lambda names, rnd: (
+        spark.createDataFrame([(n,) for n in names], "name string")
+        .select(url(F.col("name")).alias("url_norm"))
+        .withColumn("host", F.lit("h.ex"))
+        .withColumn("priority", F.lit(90))
+        .withColumn("depth", F.lit(0))
+        .withColumn("round_added", F.lit(rnd))
+        .withColumn("url_hash", F.xxhash64("url_norm"))
+    )
+    # round 1 drained seed a (per-host budget 1); seed b stayed queued
+    # and was rediscovered as a link, as was the new url c
+    tomb = spark.createDataFrame([("a",)], "name string").select(
+        F.xxhash64(url(F.col("name"))).alias("url_hash"), F.lit(1).alias("drained_round")
+    )
+    stats = {
+        "frontier_parts": [
+            state.write_bucketed(mk_front(["a", "b"], 0), 0, "frontier_full", 8),
+            state.write_bucketed(mk_front(["b", "c"], 1), 1, "frontier_delta", 8),
+        ],
+        "drained_parts": [state.write_bucketed(tomb, 1, "drained", 8)],
+    }
+    eng = object.__new__(CrawlEngine)
+    eng.spark = spark
+    eng.state = state
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for threshold in (old_bc, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            batch = drain_frontier(eng._frontier_view(stats, 8), None, None)
+            urls = sorted(r["url_norm"] for r in batch.collect())
+            assert urls == ["http://h.ex/b", "http://h.ex/c"], (threshold, urls)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
 
 def test_batch_stats_byte_estimate(spark, monkeypatch):
